@@ -135,6 +135,9 @@ def main() -> None:
         # effect; these two fields are read from the live SparkContext).
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
+        # Derived from default_parallelism unless the session pinned it;
+        # payload-only, the compact stdout line stays under its cap.
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
         **streaming,
         **calibration,
         **calibration_pre,

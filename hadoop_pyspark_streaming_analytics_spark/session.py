@@ -3,11 +3,14 @@
 The reference creates one session per script with
 ``spark.sql.shuffle.partitions`` hand-pinned to 4/8 for a tiny lab cluster
 (reference: q2_ecommerce_analysis.py:16-23, bonus.py:18-25, q4_streaming.ipynb
-cell-1 lines 16-25).  At 100 TB that knob must come from AQE instead: we
-enable adaptive execution + partition coalescing and leave the initial
-shuffle partition count an env-tunable (default 32 to match local[32]
-testing; a real cluster would set it to ~2-3x total cores and let AQE
-coalesce).
+cell-1 lines 16-25).  Here AQE re-plans batch shuffles at runtime, and the
+initial shuffle partition count defaults to the live ``defaultParallelism``:
+a stateful query fixes its state partitions (one store each, committed every
+micro-batch) at its checkpoint's first start and AQE never coalesces them.
+A restart keeps the count recorded in its offset log, so the default can
+change without breaking checkpoints.  Under dynamic allocation
+``defaultParallelism`` can be small at session start, so a cluster
+deployment passes ``shuffle_partitions=`` explicitly.
 
 Timezone is pinned to UTC so timestamp semantics are reproducible (the
 reference leaked a ``-05:00`` session offset into its golden CSVs —
@@ -77,6 +80,7 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset and no
     cluster master is configured, so tests and bench share one code path.
+    ``shuffle_partitions`` defaults to the live ``defaultParallelism``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
@@ -85,12 +89,10 @@ def get_spark(
     if master:
         builder = builder.master(master)
 
-    conf = dict(DEFAULT_CONF)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in {**DEFAULT_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

@@ -350,9 +350,7 @@ def main() -> int:
         suites = ["documents", "embeddings"] if quick else [
             "documents", "embeddings", "events", "tpch"
         ]
-    spark = get_spark(
-        app_name="degenerate_probe", master="local[4]", shuffle_partitions=4
-    )
+    spark = get_spark(app_name="degenerate_probe", master="local[4]")
     bad = []
     for suite in suites:
         catalog = relevant_specs(CATALOG, suite) if quick else CATALOG

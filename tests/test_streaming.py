@@ -4,9 +4,14 @@ mirroring the committed Batch 0/Batch 1 tables in q4_streaming.ipynb."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
-from hadoop_pyspark_streaming_analytics_spark.sources.readers import read_sensor_stream
+from hadoop_pyspark_streaming_analytics_spark.sources.readers import (
+    SENSOR_SCHEMA,
+    read_sensor_stream,
+)
 from hadoop_pyspark_streaming_analytics_spark.streaming.harness import (
     MemorySinkRun,
     write_json_batch,
@@ -158,6 +163,48 @@ def test_stream_batch_equivalence(spark, watch_dir):
         assert got == want
     finally:
         run.stop()
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark, watch_dir, tmp_path):
+    """A stateful query keeps the shuffle partition count recorded in its
+    checkpoint's offset log, so changing the session default never
+    re-partitions existing state: restarted at 3 partitions, a query first
+    started at 8 still runs 8 state stores and its result stays exact."""
+
+    def start():
+        stream = with_event_time(read_sensor_stream(spark, watch_dir, max_files_per_trigger=1))
+        return (
+            running_sensor_stats(stream)
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("ckpt_restart")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    write_json_batch(watch_dir, BATCH0, 0)
+    query = start()
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    write_json_batch(watch_dir, BATCH1, 1)
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        query = start()
+        try:
+            query.processAllAvailable()
+            progress = json.loads(query.lastProgress.json)
+            got = {tuple(r) for r in spark.table("ckpt_restart").collect()}
+        finally:
+            query.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    assert progress["batchId"] == 1
+    assert [op["numStateStoreInstances"] for op in progress["stateOperators"]] == [8]
+    batch_df = with_event_time(spark.read.schema(SENSOR_SCHEMA).json(watch_dir))
+    assert got == {tuple(r) for r in running_sensor_stats(batch_df).collect()}
 
 
 def test_session_window_merges_within_gap(spark, watch_dir):
