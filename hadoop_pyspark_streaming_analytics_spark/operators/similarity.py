@@ -1424,6 +1424,10 @@ def semdedup(
     corpus (self-join 2x2 via the re-attach join + the final projection's
     re-scan) — four needless full-corpus passes at 100 TB; post-pin the
     returned plan carries ZERO file scans (test_similarity plan pin).  The
+    pinned frame is the (vec_id, centroid_id, embedding) projection, one
+    row per vector carrying its full embedding — corpus-grain, a Tier-2
+    pin (SCALE.md "Checkpoint durability policy"): the one corpus-sized
+    payload pin buys back four full corpus passes.  The
     drop set aggregates to DISTINCT ids (bounded by the duplicate count,
     << corpus) and joins back as a small side.  Cell skew bounds the
     quadratic term — which is why :func:`ivf_cell_stats` (skew report) is

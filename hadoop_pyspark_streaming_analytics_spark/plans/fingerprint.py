@@ -1,8 +1,6 @@
-"""Per-entry source fingerprints — the derived spelling of the driver
-window's rule 2 ("entries whose OPERATOR CODE changed this round must
-re-gate"), replacing the hand-maintained changed-entry comment in
-plans/__init__.py (VERDICT r8 item 5: a rotation PR must not be ABLE to
-forget a changed entry).
+"""Per-entry source fingerprints — the input to the driver window's
+re-check rule: an entry whose operator code changed must be checked by
+the next driver round (``plans.driver_order`` rule 2).
 
 The fingerprint of a catalog entry hashes everything its driver row
 depends on, at FUNCTION granularity (module granularity would drag all
@@ -25,15 +23,16 @@ Known blind spots, accepted and documented: values fetched with
 which the catalog builders use.
 
 ``plans/entry_hashes.json`` records, per entry, the fingerprint and the
-round whose driver run must (re-)green it.  The contract, enforced by
+round whose driver run must (re-)green it.  The contract, checked by
 tests/test_catalog_oracle.py::test_changed_operator_code_regates:
 
 * recorded hash != current fingerprint → the record is stale; run
   ``python scripts/update_entry_hashes.py`` (which stamps changed
   entries with regate_round = next driver round);
 * recorded regate_round > the entry's last green driver row → the
-  change has not been driver-verified yet, so the entry must sit inside
-  the current 50-slot window.
+  change has not been driver-verified yet, so the catalog order applied
+  at import (``plans.driver_order``) puts the entry in the 50-slot
+  window; nothing has to force it in.
 """
 
 from __future__ import annotations
@@ -357,8 +356,10 @@ def refresh_hashes(specs) -> tuple[dict[str, dict], list[str]]:
     An entry with NO prior record is bootstrapped rather than forced to
     re-gate: if it already has a green driver row, the current source is
     presumed to be what was gated (regate_round = that round — the
-    window's staleness rule covers old greens separately); a never-gated
-    entry is stamped next_round, which rule 1 forces in-window anyway.
+    window's oldest-green rule covers old greens separately); a
+    never-gated entry is stamped next_round, and ``plans.driver_order``
+    ranks never-checked entries first anyway.  The caller's next import
+    of ``plans`` orders the stamped entries into the window.
 
     When the file was recorded under a DIFFERENT Python minor version
     (``__meta__.python`` != :data:`PY_VERSION`), hash mismatches are

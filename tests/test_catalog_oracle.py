@@ -5,6 +5,13 @@ from __future__ import annotations
 
 import pytest
 
+from hadoop_pyspark_streaming_analytics_spark.plans import (
+    DRIVER_WINDOW,
+    ROWS_ONLY_GATED,
+    STALENESS_ROUNDS,
+    driver_order,
+)
+from hadoop_pyspark_streaming_analytics_spark.plans import fingerprint as fp
 from hadoop_pyspark_streaming_analytics_spark.plans.catalog import CATALOG
 
 from .oracle import compare
@@ -17,129 +24,57 @@ def test_oracle_parity(spec, spark, sf_dir):
     compare(spec, spark, sf_dir)
 
 
+def _records():
+    """(last green round, stamped re-check round) per entry, from disk."""
+    regate = {n: rec["regate_round"] for n, rec in fp.load_recorded().items()}
+    return fp.last_green_rounds(), regate
+
+
 def test_driver_window_priority():
-    """The driver oracle-gates only the first DRIVER_WINDOW catalog entries
-    (observed in round 1) — every entry that has never had a driver
-    CORRECTNESS row must sit inside that window; only r01-green twins and
-    beyond-§2 breadth ops may sit past it (they stay oracle-diffed here)."""
-    from hadoop_pyspark_streaming_analytics_spark.plans import DRIVER_WINDOW
-
-    window = {s.name for s in CATALOG[:DRIVER_WINDOW]}
-    # Rule 1, derived from the driver's own history rather than a
-    # hand-copied list (the per-round maintenance kept lagging a round):
-    # every oracle-backed entry with NO green driver row in any
-    # CORRECTNESS_r*.json must sit inside the window.
-    import glob
-    import json
-    import os
-
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last_green: dict[str, int] = {}
-    rounds = []
-    for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
-        rounds.append(rnd)
-        with open(p) as f:
-            for name, row in json.load(f).items():
-                if row.get("rows_match") and row.get("schema_match"):
-                    last_green[name] = max(last_green.get(name, 0), rnd)
-    must_be_gated = {
-        s.name
-        for s in CATALOG
-        if s.oracle is not None and s.name not in last_green
-    }
-    missing = must_be_gated - window
-    assert not missing, f"never-driver-gated entries outside window: {missing}"
-    # Rule 3, also derived from history (VERDICT r7 item 1): green rows
-    # AGE — the driver regenerates testdata each round, so a stale green
-    # can hide a real break (the r3 timestamp drift).  Every oracle-backed
-    # entry whose last green row is STALENESS_ROUNDS+ rounds old must be
-    # in the current window (cutoff widened 3 → 4 in round 10 with the
-    # cycle arithmetic documented at plans/__init__.py:STALENESS_ROUNDS —
-    # 184 oracle-backed entries / 50 slots can NOT cycle in 3 rounds).
-    # This is the refresh-debt forcing function: when a new round's
-    # CORRECTNESS file lands, the stale set recomputes and this check
-    # tells the next rotation exactly what it owes.
-    from hadoop_pyspark_streaming_analytics_spark.plans import (
-        ROTATION_ROUND,
-        STALENESS_ROUNDS,
-    )
-
-    stale_cutoff = max(rounds) - STALENESS_ROUNDS
-    stale = {
-        s.name
-        for s in CATALOG
-        if s.oracle is not None and 0 < last_green.get(s.name, 0) <= stale_cutoff
-    }
-    overdue = stale - window
-    if overdue and ROTATION_ROUND == max(rounds):
-        # Between rotations (ADVICE r9 item 1): EXACTLY the round this
-        # window was rotated for has landed, so the recomputed debt is
-        # the NEXT rotation's work, not a regression at this HEAD.  Keep
-        # the debt loud (the owed list in the xfail reason) without
-        # turning every merged HEAD red.  The downgrade is deliberately
-        # one-round-wide: a fresh rotation claim (ROTATION_ROUND > max
-        # round) asserts hard below, and so does ROTATION_ROUND < max
-        # round — that means an ENTIRE driver round ran on a window
-        # never rotated for it, which is the forgotten-rotation failure
-        # this forcing function exists to catch (an open-ended `<=`
-        # downgrade would stay politely yellow forever).
-        pytest.xfail(
-            f"rotation debt for round {max(rounds) + 1} (window rotated "
-            f"for r{ROTATION_ROUND}): entries last driver-green at "
-            f"r{stale_cutoff} or earlier owed a slot: {sorted(overdue)}"
-        )
-    assert not overdue, (
-        f"entries last driver-green at r{stale_cutoff} or earlier are "
-        f"outside the window (window rotated for r{ROTATION_ROUND}, "
-        f"newest CORRECTNESS round r{max(rounds)}): {sorted(overdue)}"
-    )
-    # the window must be exactly full: if non-tail entries exceed
-    # DRIVER_WINDOW, whichever sorts last silently falls outside the
-    # driver's evaluation — the failure mode this whole policy exists to
-    # prevent.  (Fewer than DRIVER_WINDOW would waste hard-signal slots.)
-    from hadoop_pyspark_streaming_analytics_spark.plans import _TAIL
-
-    non_tail = len(CATALOG) - len(_TAIL)
-    assert non_tail == DRIVER_WINDOW, (
-        f"{non_tail} non-tail entries vs {DRIVER_WINDOW} driver slots — "
-        "update _TAIL in plans/__init__.py"
-    )
-    # every driver slot must carry a hard differential check — an
-    # oracle-less entry inside the window wastes one of the 50 slots.
-    # One reviewed exception: sketch_daily_user_hll (DataSketches digests
-    # have no DuckDB oracle by construction; its rows-only driver row plus
-    # the pinned-estimate test in test_llm_ops is the tier's second signal).
-    slotless = [
-        s.name
-        for s in CATALOG[:DRIVER_WINDOW]
-        if s.oracle is None and s.name != "sketch_daily_user_hll"
+    """The driver oracle-checks only the first DRIVER_WINDOW catalog
+    entries, so catalog order is policy.  CATALOG must be
+    ``driver_order`` over the on-disk records, and everything that order
+    owes a slot must fit in the window: never-checked, re-check owed, and
+    stale (last green at least STALENESS_ROUNDS rounds old) entries."""
+    greens, regate = _records()
+    assert [s.name for s in CATALOG] == [
+        s.name for s in driver_order(CATALOG, greens, regate)
     ]
+    cutoff = fp.correctness_rounds()[-1] - STALENESS_ROUNDS
+
+    def due(spec):
+        green = greens.get(spec.name, 0)
+        owed = regate.get(spec.name, 0) > green
+        if spec.oracle is None:
+            return spec.name == ROWS_ONLY_GATED and owed
+        return green == 0 or owed or green <= cutoff
+
+    due_names = {s.name for s in CATALOG if due(s)}
+    # the capacity alarm: past this, whichever due entry sorts last
+    # silently falls outside the driver's evaluation
+    assert len(due_names) <= DRIVER_WINDOW, (
+        f"{len(due_names)} entries owe a driver slot, only "
+        f"{DRIVER_WINDOW} exist: {sorted(due_names)}"
+    )
+    window = CATALOG[:DRIVER_WINDOW]
+    assert due_names <= {s.name for s in window}
+    # an oracle-less entry in the window wastes a hard-signal slot
+    slotless = [s.name for s in window if s.oracle is None and not due(s)]
     assert not slotless, f"oracle-less entries occupy driver slots: {slotless}"
 
 
 def test_changed_operator_code_regates():
-    """Rule 2 of the window policy, DERIVED instead of hand-listed
-    (VERDICT r8 item 5): an oracle-backed entry whose source fingerprint
+    """Rule 2 of the window order, derived from source fingerprints
     (builder + oracle + every transitively-referenced package function
-    and constant — plans/fingerprint.py) changed must re-gate.  Two
-    enforcement halves:
+    and constant — plans/fingerprint.py):
 
     1. the recorded fingerprint must match the current source — else
-       someone changed operator code without running
-       ``python scripts/update_entry_hashes.py`` (which stamps the
-       changed entries with regate_round = next driver round);
-    2. every entry whose stamped regate_round exceeds its last green
-       driver row must sit INSIDE the current driver window — the change
-       has not been driver-verified, and a rotation that omits it would
-       ship unverified code past the gate."""
-    from hadoop_pyspark_streaming_analytics_spark.plans import DRIVER_WINDOW
-    from hadoop_pyspark_streaming_analytics_spark.plans import (
-        fingerprint as fp,
-    )
-
+       operator code changed without running
+       ``python scripts/update_entry_hashes.py``, which stamps the
+       changed entries with regate_round = next driver round;
+    2. every entry whose stamp exceeds its last green driver row sits
+       inside the window — ``driver_order`` ranks it ahead of every
+       refresh, so the change is checked by the next driver round."""
     recorded, meta = fp.load_recorded(with_meta=True)
     assert recorded, (
         "plans/entry_hashes.json missing — run "
@@ -165,19 +100,12 @@ def test_changed_operator_code_regates():
         "run `python scripts/update_entry_hashes.py` "
         f"(unrecorded: {unrecorded}, changed: {stale_hash})"
     )
-    greens = fp.last_green_rounds()
-    window = {s.name for s in CATALOG[:DRIVER_WINDOW]}
-    # the in-window obligation applies to oracle-backed entries (plus the
-    # reviewed rows-only exception): oracle-less entries may not occupy
-    # driver slots (the slotless rule in test_driver_window_priority) —
-    # their re-gate signal is the local pytest suite instead.
-    eligible = {s.name for s in SPECS} | {"sketch_daily_user_hll"}
-    owed = {
-        name
-        for name, rec in recorded.items()
-        if name in eligible and rec["regate_round"] > greens.get(name, 0)
-    }
-    outside = owed - window
+    greens, regate = _records()
+    # oracle-less entries re-check through the local suite instead, bar
+    # the reviewed rows-only exception
+    eligible = {s.name for s in SPECS} | {ROWS_ONLY_GATED}
+    owed = {n for n in eligible if regate.get(n, 0) > greens.get(n, 0)}
+    outside = owed - {s.name for s in CATALOG[:DRIVER_WINDOW]}
     assert not outside, (
         "entries with driver-unverified source changes sit outside the "
         f"window: {sorted(outside)}"
