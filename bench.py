@@ -2,11 +2,15 @@
 """Benchmark runner: headline catalog queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints ONE compact JSON line (see :func:`_compact_line`):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is forced end-to-end with the ``noop`` sink (computes every
-column and row; no driver collect, no result-size bias).
+column and row; no driver collect, no result-size bias).  The full payload,
+written to .benchmarks/, adds raw samples, the streaming tier and
+``queries_ledger``: per headline query, the Spark jobs, stages, tasks,
+executor time and bytes of the sample whose wall is reported.  Those counts
+do not drift with the host, so they are the run-to-run regression signal.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ def main() -> None:
 
     from hadoop_pyspark_streaming_analytics_spark.plans.catalog import CATALOG
     from hadoop_pyspark_streaming_analytics_spark.session import get_spark
+    from perfbench.probes import Ledger
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("WARN")
@@ -49,13 +54,8 @@ def main() -> None:
         # in block-manager memory and skew later measurements.
         gc.collect()
 
-    # Host yardstick BEFORE the query tier (and again after, inside
-    # _bench_calibration): r5 observed core_total swinging 28→40 s across
-    # same-code runs with flat single-point calibration — a pre/post pair
-    # shows whether the host drifted WITHIN the run.
-    calibration_pre = {
-        k + "_pre": v for k, v in _bench_calibration(spark, sf_dir).items()
-    }
+    # Work ledger from here on: the warm-up's jobs belong to no sample.
+    ledger = Ledger(spark)
 
     # Steady-state timing: best of 2 measured runs per query (single-JVM
     # local mode has ~±0.5 s GC/scheduler noise per query; min-of-N is the
@@ -63,7 +63,7 @@ def main() -> None:
     # Sub-second queries get a THIRD measured run (VERDICT r6 item 3):
     # fixed per-query job overhead dominates down there, so two samples
     # can both land on the same scheduler hiccup and flag a phantom
-    # normalized regression — the r6 events_sliding/hourly 1.30x case.
+    # slowdown — the r6 events_sliding/hourly 1.30x case.
     # Samples are taken ROUND-ROBIN (pass 1 over every query, then pass
     # 2) rather than back-to-back (round 9): within-run drift — GC debt,
     # block-manager pressure, page-cache churn accumulating through the
@@ -74,12 +74,14 @@ def main() -> None:
     # independent draws of the run-level noise.
     # Raw per-query samples are reported so variance is auditable.
     timings_raw: dict[str, list[float]] = {spec.name: [] for spec in specs}
+    work_raw: dict[str, list[dict]] = {spec.name: [] for spec in specs}
 
     def _sample(spec) -> None:
         t0 = time.perf_counter()
         df = spec.builder(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         timings_raw[spec.name].append(round(time.perf_counter() - t0, 3))
+        work_raw[spec.name].append(ledger.collect())  # outside the timer
         gc.collect()
 
     for _pass in range(2):
@@ -101,6 +103,10 @@ def main() -> None:
         if len(s) == 2 and max(s) > 2.0 * min(s):
             _sample(spec)
     timings = {name: min(s) for name, s in timings_raw.items()}
+    queries_ledger = {}
+    for name, s in timings_raw.items():
+        work = work_raw[name][s.index(timings[name])]
+        queries_ledger[name] = {"jobs": work["jobs"], **work["sums"]}
 
     # Tier hygiene: the batch tier leaves cached relations, checkpoint
     # blocks, and GC debt in the shared JVM — observed inflating the
@@ -110,7 +116,6 @@ def main() -> None:
     for _ in range(3):
         gc.collect()
     streaming = _bench_streaming(spark)
-    calibration = _bench_calibration(spark, sf_dir)
 
     total = round(sum(timings.values()), 3)
     # Round-over-round comparability: ``value`` grows whenever the headline
@@ -138,40 +143,33 @@ def main() -> None:
         # Derived from default_parallelism unless the session pinned it;
         # payload-only, the compact stdout line stays under its cap.
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "queries_ledger": queries_ledger,
         **streaming,
-        **calibration,
-        **calibration_pre,
         **_host_identity(),
-        **_normalized_vs_prev(
-            timings, core_total, calibration, streaming,
-            calibration_pre=calibration_pre,
-            recalibrate=lambda: _bench_calibration(spark, sf_dir),
-        ),
     }
     # Persist BEFORE printing (VERDICT r6 item 2): the driver's tail
-    # capture truncated BENCH_r06's single JSON line (parsed: null),
-    # which would silently disable the next round's normalized
-    # comparison — the local .benchmarks/ copy is the durable history
-    # _normalized_vs_prev reads first.
+    # capture truncated BENCH_r06's single JSON line (parsed: null); the
+    # .benchmarks/ copy is the durable record of the full payload.
     payload_path = _persist_summary(summary, _round_id())
-    # Contract line, COMPACT (VERDICT r16 item 2): the full summary line
-    # outgrew the driver's 2000-char stdout tail capture (BENCH_r15
-    # parsed: null — the line's START fell outside the window), which
-    # silently destroyed the round-over-round comparison.  Print only the
-    # contract fields ({metric, value, unit, queries, sf} + the scalar
-    # audit fields; ~1.7 KB at 44 queries, pytest-capped in
-    # tests/test_bench_history.py) as the FINAL stdout line and point at
-    # the persisted full payload (queries_raw, streaming splits,
-    # calibration history) committed under .benchmarks/.  Same queries,
-    # same SF, same min-of-N methodology — only the reporting envelope
-    # changed; the full payload still carries every previous field.
-    compact = {
+    print(json.dumps(_compact_line(summary, payload_path)))
+    spark.stop()
+
+
+def _compact_line(summary: dict, payload_path: str) -> dict:
+    """The contract line, COMPACT (VERDICT r16 item 2): the full summary
+    line outgrew the driver's 2000-char stdout tail capture (BENCH_r15
+    parsed: null — the line's START fell outside the window).  Only the
+    contract fields ({metric, value, unit, queries, sf}) and the scalar
+    audit fields go to stdout, ~1.7 KB at 44 queries and pytest-capped in
+    tests/test_bench_history.py; ``payload`` points at the full summary
+    under .benchmarks/."""
+    return {
         "metric": summary["metric"],
         "value": summary["value"],
         "unit": summary["unit"],
-        "queries": timings,
-        "sf": sf,
-        "core_total": core_total,
+        "queries": summary["queries"],
+        "sf": summary["sf"],
+        "core_total": summary["core_total"],
         "core_n": summary["core_n"],
         "master": summary["master"],
         "default_parallelism": summary["default_parallelism"],
@@ -180,8 +178,6 @@ def main() -> None:
             payload_path, os.path.dirname(os.path.abspath(__file__))
         ),
     }
-    print(json.dumps(compact))
-    spark.stop()
 
 
 def _bench_dir() -> str:
@@ -194,9 +190,7 @@ def _round_id() -> int:
     """The in-flight round number: the driver writes CORRECTNESS_r{N}.json
     at the END of round N, so the current round is max(existing)+1.  A
     post-round re-run (CORRECTNESS_r{N} already present for this round's
-    own results) only shifts which file the summary lands in — never which
-    PRIOR round _normalized_vs_prev compares against, because the
-    comparison excludes every round >= the bench being summarized."""
+    own results) only shifts which file the summary lands in."""
     import glob
     import re
 
@@ -229,12 +223,10 @@ def _persist_summary(summary: dict, round_id: int) -> str:
     )
     d = _bench_dir()
     os.makedirs(d, exist_ok=True)
-    # The round-over-round history grain is (round, sf=0.1) — the SF the
-    # driver benches at.  A verification run at another SF (e.g. the
-    # sf0.01 smoke in .claude/skills/verify) must NOT clobber that
-    # history file (it did once, in round 8): off-default SFs land in an
-    # sf-suffixed file that _load_prev_summary's bench_r(\d+).json$
-    # pattern deliberately ignores.
+    # The history grain is (round, sf=0.1) — the SF the driver benches
+    # at.  A verification run at another SF (e.g. the sf0.01 smoke in
+    # .claude/skills/verify) must NOT clobber that history file (it did
+    # once, in round 8): off-default SFs land in an sf-suffixed file.
     sf = summary.get("sf")
     suffix = "" if sf == 0.1 else f"_sf{sf}"
     path = os.path.join(d, f"bench_r{round_id:02d}{suffix}.json")
@@ -243,53 +235,6 @@ def _persist_summary(summary: dict, round_id: int) -> str:
         json.dump(summary, f, indent=1)
     os.replace(tmp, path)
     return path
-
-
-def _load_prev_summary(current_round: int, this_sf: float) -> tuple[str, dict] | None:
-    """The newest PRIOR round's bench summary at the same SF: prefer the
-    local .benchmarks/bench_r{M}.json history (complete by construction),
-    fall back to the driver-captured BENCH_r{M}.json `parsed` field for
-    rounds that predate local persistence.  Excludes the current round
-    (ADVICE r6: comparing a re-run against its own stored results reports
-    ratio ~1.0 and masks regressions) and any unparseable capture."""
-    import glob
-    import re
-
-    candidates: dict[int, tuple[str, dict]] = {}
-    repo = os.path.dirname(_bench_dir())
-    for p in sorted(glob.glob(os.path.join(repo, "BENCH_r*.json"))):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if not m:
-            continue
-        try:
-            with open(p) as f:
-                parsed = json.load(f).get("parsed")
-        except Exception:
-            continue
-        if parsed:
-            candidates[int(m.group(1))] = (os.path.basename(p), parsed)
-    # Local copies override driver captures for the same round.
-    for p in sorted(glob.glob(os.path.join(_bench_dir(), "bench_r*.json"))):
-        m = re.search(r"bench_r(\d+)\.json$", p)
-        if not m:
-            continue
-        try:
-            with open(p) as f:
-                candidates[int(m.group(1))] = (os.path.basename(p), json.load(f))
-        except Exception:
-            continue
-    usable = [
-        (r, name, d)
-        for r, (name, d) in candidates.items()
-        if r < current_round
-        and d.get("core_total")
-        and d.get("calibration_scan_sec")
-        and d.get("sf") == this_sf
-    ]
-    if not usable:
-        return None
-    _, name, d = max(usable)
-    return name, d
 
 
 def _host_identity() -> dict:
@@ -316,196 +261,6 @@ def _host_identity() -> dict:
     }
 
 
-def _normalized_vs_prev(
-    timings: dict[str, float],
-    core_total: float,
-    calibration: dict,
-    streaming: dict | None = None,
-    calibration_pre: dict | None = None,
-    recalibrate=None,
-) -> dict:
-    """Calibration-NORMALIZED round-over-round comparison (VERDICT r5
-    item 3): divide this run's core_total (and per-query times) by the
-    same-run parquet-scan yardstick, read the newest BENCH_r*.json next to
-    this file, and report the normalized ratio against its stored values —
-    the number that separates host drift (ratio ~1.0 on untouched code)
-    from a real engine regression.  Per-query regressions are flagged
-    only when they exceed 1.3x on BOTH the raw and the normalized basis
-    (see the two-basis rationale inline — round 8); queries new this
-    round have no prev and are skipped.  The prior round's summary comes from _load_prev_summary
-    (local .benchmarks/ history first, driver-tail capture fallback;
-    never the in-flight round's own file).  Silently returns only the
-    normalized core when no prior bench with a calibration exists."""
-    cal = calibration.get("calibration_scan_sec")
-    out: dict = {}
-    if not cal:
-        return out
-    out["core_total_normalized"] = round(core_total / cal, 3)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    this_sf = float(
-        os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1
-    )
-    loaded = _load_prev_summary(_round_id(), this_sf)
-    if loaded is None:
-        return out
-    name, prev = loaded
-    prev_core = prev["core_total"]
-    prev_cal = prev["calibration_scan_sec"]
-    out["prev_bench"] = name
-    out["prev_core_total_normalized"] = round(prev_core / prev_cal, 3)
-    out["core_normalized_ratio"] = round(
-        (core_total / cal) / (prev_core / prev_cal), 4
-    )
-    # The yardstick itself moves between rounds (r8 observed the scan
-    # calibration 38% faster than r7 while raw query times dropped ~5% —
-    # page-cache/disk state, not code).  A swing that large makes the
-    # single-basis normalized ratio flag dozens of phantom regressions
-    # (dividing by a deflated yardstick inflates every query uniformly).
-    # Report the swing, and flag a query only when it regressed on BOTH
-    # bases: raw wall (immune to yardstick drift, fooled by uniform host
-    # slowdown) AND normalized (immune to uniform host drift, fooled by
-    # yardstick swing).  A real engine regression shows on both; each
-    # failure mode of one basis is cancelled by the other.
-    out["calibration_swing"] = round(cal / prev_cal, 4)
-    if prev.get("host_id"):
-        out["same_host_as_prev"] = (
-            prev["host_id"] == _host_identity()["host_id"]
-        )
-    # Round 9 (VERDICT r8 item 8): the scan/cpu yardstick under-corrects
-    # across hosts (r8 saw +23% "normalized" on untouched queries while
-    # the drift was uniform).  The robust fix is SELF-RELATIVE: estimate
-    # host drift as the MEDIAN raw ratio over all queries common to both
-    # rounds — a uniform host change moves every query, so the median IS
-    # the drift; a real regression moves few queries, so the median is
-    # immune to it.  A query is flagged only when it regressed on BOTH
-    # bases: raw wall > 1.3 (immune to yardstick drift) AND
-    # drift-adjusted raw/median > 1.3 (immune to uniform host drift).
-    # The scan-calibration normalized ratio stays reported for history
-    # continuity but no longer gates.
-    prev_q = prev.get("queries") or {}
-    common = [
-        (name, t, prev_q[name])
-        for name, t in timings.items()
-        if prev_q.get(name)
-    ]
-    import statistics
-
-    ratios = [t / pt for _, t, pt in common]
-    drift = statistics.median(ratios) if ratios else 1.0
-    out["host_drift_median_raw_ratio"] = round(drift, 4)
-    out["regression_basis"] = (
-        "raw > 1.3 AND raw/median_drift > 1.3 (median raw ratio over "
-        f"{len(ratios)} common queries estimates uniform host drift)"
-    )
-    regressions = {}
-    for name, t, pt in common:
-        raw_ratio = round(t / pt, 4)
-        adj_ratio = round(raw_ratio / drift, 4)
-        if raw_ratio > 1.3 and adj_ratio > 1.3:
-            regressions[name] = {
-                "raw": raw_ratio,
-                "drift_adjusted": adj_ratio,
-                "scan_normalized": round((t / cal) / (pt / prev_cal), 4),
-            }
-    out["normalized_regressions"] = regressions
-    # The median-drift basis is blind to a UNIFORM regression on the
-    # SAME host (ADVICE r9 item 3): a change that slows every query
-    # 1.4x IS the median, drift_adjusted ~1.0 everywhere, nothing
-    # flags.  Arbiter: the calibration scan is engine-independent, so
-    # on the same host its swing bounds what the HOST can account for —
-    # when the median query drift exceeds the yardstick swing by the
-    # same 1.3 bar, the remainder is the code's.
-    if out.get("same_host_as_prev") and drift > 1.3:
-        vs_cal = round(drift / out["calibration_swing"], 4)
-        swing = out["calibration_swing"]
-        # Near-miss hardening (VERDICT r10 item 4): r10's host-vs-code
-        # verdict rode on drift/swing = 1.299 against the 1.3 bar — a
-        # coin-flip margin when the swing rests on one end-of-run
-        # sample.  Within ±10% of the bar, take a THIRD calibration
-        # sample and re-judge on the median of pre/end/extra scans;
-        # the near-miss is recorded either way so a knife-edge verdict
-        # is visible in the artifact, not just in prose.
-        if recalibrate is not None and 1.3 / 1.1 <= vs_cal <= 1.3 * 1.1:
-            samples = [
-                s for s in (
-                    (calibration_pre or {}).get("calibration_scan_sec_pre"),
-                    cal,
-                    recalibrate().get("calibration_scan_sec"),
-                )
-                if s
-            ]
-            swing = round(statistics.median(samples) / prev_cal, 4)
-            refined = round(drift / swing, 4)
-            out["near_miss"] = {
-                "bar": 1.3,
-                "initial_drift_vs_calibration": vs_cal,
-                "calibration_samples_sec": [round(s, 3) for s in samples],
-                "calibration_swing_median3": swing,
-                "drift_vs_calibration_median3": refined,
-            }
-            vs_cal = refined
-        if vs_cal > 1.3:
-            out["whole_suite_regression"] = {
-                "median_raw_ratio": round(drift, 4),
-                "calibration_swing": swing,
-                "drift_vs_calibration": vs_cal,
-                "basis": "same host, median query drift > 1.3 and > "
-                         "1.3x the engine-independent calibration swing"
-                         + (" (median-3 near-miss basis)"
-                            if "near_miss" in out else ""),
-            }
-        else:
-            out["whole_suite_drift_attribution"] = (
-                f"median raw ratio {round(drift, 4)} on the same host, "
-                f"but the calibration scan swung {swing} "
-                "— host state, not code (uniform-regression check passed"
-                + (", median-3 near-miss basis)" if "near_miss" in out
-                   else ")")
-            )
-    # Streaming splits under the SAME two-bar rule (VERDICT r9 item 5):
-    # the batch-query median estimates drift from 41 samples, streaming
-    # from ~7 — a noisier yardstick, so streaming gets its own median
-    # (streaming walls include state-store/sink costs batch queries
-    # never pay; one drift does not fit both tiers).
-    #
-    # The three CO-SCHEDULED splits are attribution-only, never flagged
-    # (round 11): running/tumbling/sliding drain ONE shared source
-    # concurrently, so each split measures "residual work when its
-    # process_all turn came" — a scheduling artifact, not a per-query
-    # time (eight same-code sliding samples spanned 0.057-1.285 s and
-    # history holds 0.05-10.4 s; running 1.0-9.7 s).  Only their SUM is
-    # code-determined, so the 3-query WALL joins the basis in their
-    # place; the isolated figures (adc/lexical/curation) each own their
-    # query and stay flaggable.
-    prev_s = dict(prev.get("streaming_query_splits_sec") or {})
-    this_s = dict(
-        (streaming or {}).get("streaming_query_splits_sec") or {}
-    )
-    for d, src in ((prev_s, prev), (this_s, streaming or {})):
-        for name in ("running", "tumbling", "sliding"):
-            d.pop(name, None)
-        if src.get("streaming_3query_wall_sec"):
-            d["3query_wall"] = src["streaming_3query_wall_sec"]
-    s_common = [
-        (name, t, prev_s[name]) for name, t in this_s.items()
-        if prev_s.get(name)
-    ]
-    if s_common:
-        s_ratios = [t / pt for _, t, pt in s_common]
-        s_drift = statistics.median(s_ratios)
-        out["streaming_drift_median_raw_ratio"] = round(s_drift, 4)
-        s_regressions = {}
-        for name, t, pt in s_common:
-            raw_ratio = round(t / pt, 4)
-            adj_ratio = round(raw_ratio / s_drift, 4)
-            if raw_ratio > 1.3 and adj_ratio > 1.3:
-                s_regressions[name] = {
-                    "raw": raw_ratio, "drift_adjusted": adj_ratio,
-                }
-        out["streaming_regressions"] = s_regressions
-    return out
-
-
 # The 24 headline queries of BENCH_r02.json, frozen for cross-round
 # comparability (see core_total above).  Do NOT edit when adding headline
 # queries — new ones are reported in ``queries``/``value`` only.
@@ -524,52 +279,6 @@ CORE_QUERIES = frozenset(
         "text_quality_scores",
     }
 )
-
-
-def _bench_calibration(spark, sf_dir: str) -> dict:
-    """Fixed reference workloads whose cost depends ONLY on host speed —
-    never on engine code — so cross-round comparisons can separate
-    machine noise from real regressions (r5 observed a uniform ~+30%
-    drift on UNTOUCHED queries vs BENCH_r04; per-query deltas are
-    meaningless without a same-run host yardstick).
-
-    * ``calibration_cpu_sec``: sum over spark.range(1e9) with arithmetic —
-      pure whole-stage codegen, no disk, no shuffle.
-    * ``calibration_scan_sec``: full-column count over the lineitem
-      parquet — disk + decode path at the bench SF.
-    Both best-of-2 after a warm-up run, like the query tier.  To compare
-    round N to round M, scale per-query times by the calibration ratio.
-    """
-    import gc
-    import time
-
-    out = {}
-    workloads = {
-        "calibration_cpu_sec": lambda: spark.range(1_000_000_000)
-        .selectExpr("sum(id * 2 + 1)")
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-        "calibration_scan_sec": lambda: spark.read.parquet(
-            f"{sf_dir}/lineitem.parquet"
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-    }
-    for name, fn in workloads.items():
-        fn()  # warm-up
-        best = float("inf")
-        # best-of-3 (round 8: the yardstick itself swung 38% between the
-        # r7 and r8 runs — every extra sample narrows the one number the
-        # whole normalization divides by)
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-            gc.collect()
-        out[name] = round(best, 3)
-    return out
 
 
 def _bench_streaming(spark, n_rows: int = 50_000) -> dict:

@@ -980,19 +980,37 @@ def containment_pairs_from_shingles(
     > df_cap other docs, exactly the pairs a near-dup pass should not
     spend verification on.
 
-    Pair-proposal spelling (round 16, guide §2.4): ONE groupBy(shingle)
-    builds the capped posting lists and the pairs explode map-side inside
-    them (doc_a < doc_b) — the per-group twin of the previous
-    df-filter-join + inverted-index self-join, which shuffled the postings
-    table three times (df aggregate, rare semi-join, self-join) to reach
-    the identical candidate set.  The posting arrays are <= df_cap
-    elements by construction, so the explode is bounded and skew-free.
+    Pair-proposal spelling (round 16, guide §2.4; hot-shingle hardening
+    round 17, ADVICE r16): the pairs explode map-side inside the capped
+    posting lists (doc_a < doc_b), replacing the round-15 inverted-index
+    SELF-JOIN — the postings table's largest shuffle — for the identical
+    candidate set.  The posting lists are built in two bounded phases:
+    a df COUNT (partial-aggregates in constant space per group) keeps
+    only rare shingles, and collect_set runs over those rare shingles
+    ONLY — so a hot boilerplate shingle present in millions of docs
+    never builds an unbounded array in one aggregation buffer (the
+    round-16 single-phase spelling collected the full posting list
+    before its size filter: an executor-OOM/straggler hazard at the
+    100 TB design point).  The arrays that exist are <= df_cap elements
+    by construction, so the explode stays bounded and skew-free.
+
+    Input precondition, load-bearing for ``df``: ``sh`` must be DISTINCT
+    per (doc_id, shingle) — the doc_shingles(distinct=True) default and
+    this operator's only caller — so count(*) per shingle IS the
+    distinct-document frequency.  A non-distinct input would overcount
+    df and silently shrink the candidate set (ADVICE r16 low item 2).
     """
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    groups = (
+    rare = (
         sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= df_cap)
+        .select("shingle")
+    )
+    groups = (
+        sh.join(rare, "shingle", "left_semi")
+        .groupBy("shingle")
         .agg(F.collect_set("doc_id").alias("docs"))
-        .filter(F.size("docs") <= df_cap)
     )
     cand = (
         groups.select(F.explode("docs").alias("doc_a"), "docs")

@@ -356,7 +356,6 @@ def foreach_batch_curation(
     rows: int = 4,
     stage_times: dict[str, float] | None = None,
     compact_every: int | None = None,
-    compact_min_ratio: float = 1.0,
 ) -> Callable[[DataFrame, int], None]:
     """The STREAMING curation pipeline — the streaming twin of
     pipelines.curate_documents_modern's shape, composed entirely from the
@@ -411,11 +410,11 @@ def foreach_batch_curation(
 
     * live append generation count >= ``compact_every`` (the count
       floor: never fold a handful of generations), AND
-    * accumulated append bytes >= ``compact_min_ratio`` x current base
-      bytes (the size gate: a fold must at least grow the base by the
-      ratio, so each byte is rewritten O(log N) times total — the LSM /
-      Delta OPTIMIZE geometric-compaction discipline — instead of
-      O(N/compact_every) times under a fixed cadence).
+    * accumulated append bytes >= current base bytes (the size gate: a
+      fold must at least double the base, so each byte is rewritten
+      O(log N) times total — the LSM / Delta OPTIMIZE geometric-compaction
+      discipline — instead of O(N/compact_every) times under a fixed
+      cadence).
 
     A store that has never folded has base bytes 0, so the first fold
     fires on the count floor alone.  Append bytes are approximated as
@@ -482,7 +481,7 @@ def foreach_batch_curation(
                     f"{store_path}/batch_id={int(manifest['live_base'])}",
                 )
                 append_b = content_bytes(spark, store_path) - base_b
-                if append_b >= compact_min_ratio * base_b:
+                if append_b >= base_b:
                     compact_band_store(spark, store_path, keep_latest=1)
         if stage_times is not None:
             t5 = time.perf_counter()

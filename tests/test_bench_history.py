@@ -1,13 +1,12 @@
-"""bench.py's local summary history (VERDICT r6 item 2 + ADVICE r6).
+"""bench.py's local summary history (VERDICT r6 item 2 + ADVICE r6) and
+its compact contract line (VERDICT r16 item 2).
 
 BENCH_r06.json proved the driver's tail capture truncates once the
-single JSON summary line outgrows ~2 KB (`parsed: null`), which silently
-disabled the normalized round-over-round comparison.  bench.py now
+single JSON summary line outgrows ~2 KB (`parsed: null`).  bench.py now
 persists its full summary to .benchmarks/bench_r{N}.json before printing
-and prefers that history — these tests pin the persistence round-trip
-(including a >16 KB summary) and the prior-round selection rules:
-never the in-flight round's own file, never another SF, local copy
-overrides a driver tail capture for the same round.
+a compact line — these tests pin the persistence round-trip (including a
+>16 KB summary), the round id, the per-SF file names, and the compact
+line's worst-case size.
 """
 
 from __future__ import annotations
@@ -37,10 +36,9 @@ def bench(tmp_path, monkeypatch):
     return mod
 
 
-def _summary(core=10.0, cal=0.25, sf=0.1, queries=None):
+def _summary(core=10.0, sf=0.1, queries=None):
     return {
         "core_total": core,
-        "calibration_scan_sec": cal,
         "sf": sf,
         "queries": queries or {"q1": 1.0},
     }
@@ -73,327 +71,30 @@ def test_round_id_is_one_past_latest_correctness(bench, tmp_path):
     assert bench._round_id() == 7
 
 
-def test_prev_summary_skips_in_flight_round_and_other_sf(bench, tmp_path):
-    bench._persist_summary(_summary(core=5.0), 6)
-    bench._persist_summary(_summary(core=9.0), 7)
-    # r7 in flight: its own file must NOT be the comparison target
-    name, prev = bench._load_prev_summary(7, 0.1)
-    assert name == "bench_r06.json" and prev["core_total"] == 5.0
-    # an off-default-SF run lands in its own suffixed file (round-8 rule:
-    # it must not clobber the sf0.1 history), and prior-round selection
-    # ignores it — so the sf0.1 candidate survives and an sf0.01 lookup
-    # finds nothing.  If a same-round file DOES hold another SF (a
-    # pre-rule clobber), the SF filter still disqualifies it.
-    bench._persist_summary(_summary(core=6.0, sf=0.01), 6)
-    name, prev = bench._load_prev_summary(7, 0.1)
-    assert name == "bench_r06.json" and prev["core_total"] == 5.0
-    assert bench._load_prev_summary(7, 0.01) is None
-    import json as _json
-
-    with open(tmp_path / ".benchmarks" / "bench_r06.json", "w") as f:
-        _json.dump(_summary(core=6.0, sf=0.01), f)
-    assert bench._load_prev_summary(7, 0.1) is None
-
-
-def test_prev_summary_prefers_local_history_over_driver_tail(bench, tmp_path):
-    # driver capture for r6: truncated (parsed null) -> unusable
-    (tmp_path / "BENCH_r06.json").write_text(
-        json.dumps({"n": 6, "tail": "...", "parsed": None})
-    )
-    # driver capture for r5: parsed fine
-    (tmp_path / "BENCH_r05.json").write_text(
-        json.dumps({"n": 5, "parsed": _summary(core=4.0)})
-    )
-    name, prev = bench._load_prev_summary(7, 0.1)
-    assert name == "BENCH_r05.json" and prev["core_total"] == 4.0
-    # a local r6 copy now exists -> it outranks the r5 driver capture
-    bench._persist_summary(_summary(core=5.5), 6)
-    name, prev = bench._load_prev_summary(7, 0.1)
-    assert name == "bench_r06.json" and prev["core_total"] == 5.5
-
-
-def test_real_repo_has_r06_history_for_r07(tmp_path):
-    """The reconstructed .benchmarks/bench_r06.json (rebuilt from the
-    truncated driver tail) must parse and carry everything the normalized
-    comparison needs — this is round 7's actual baseline."""
-    with open(os.path.join(_REPO, ".benchmarks", "bench_r06.json")) as f:
-        d = json.load(f)
-    assert d["sf"] == 0.1
-    assert d["core_total"] == 35.144
-    assert d["calibration_scan_sec"] > 0
-    assert len(d["queries"]) >= 37
-
-
-def test_regressions_require_both_raw_and_drift_adjusted_bases(
-    bench, tmp_path, monkeypatch
-):
-    """Round-9 rule (VERDICT r8 item 8): host drift is estimated as the
-    MEDIAN raw ratio over common queries — a query faster in raw wall is
-    never flagged; a query slower on both the raw and the drift-adjusted
-    basis is, with all three ratios reported; and a UNIFORM slowdown
-    (every query 1.4x — the r8 cross-host phantom) flags nothing because
-    the median absorbs it."""
-    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")  # round_id -> 7
-    bench._persist_summary(
-        _summary(
-            core=10.0,
-            cal=0.4,
-            queries={"fast": 1.0, "mid": 1.0, "slow": 1.0},
-        ),
-        6,
-    )
-    out = bench._normalized_vs_prev(
-        {"fast": 0.95, "mid": 1.0, "slow": 1.45},
-        core_total=10.0,
-        calibration={"calibration_scan_sec": 0.28},
-    )
-    # yardstick swing is still surfaced (0.28 / 0.4)
-    assert out["calibration_swing"] == 0.7
-    assert out["host_drift_median_raw_ratio"] == 1.0
-    # "fast" is faster raw (and 1.36x scan-normalized — a pure yardstick
-    # artifact): never flagged
-    assert "fast" not in out["normalized_regressions"]
-    # "slow" regressed on both bases -> flagged with all ratios
-    flagged = out["normalized_regressions"]["slow"]
-    assert flagged["raw"] == 1.45
-    assert flagged["drift_adjusted"] == 1.45  # median drift 1.0
-    assert flagged["scan_normalized"] > 2.0  # 1.45 / 0.7 swing, reported
-    assert "median_drift" in out["regression_basis"]
-
-    # uniform host slowdown: every query 1.4x raw -> median drift 1.4,
-    # drift-adjusted ~1.0 everywhere, nothing flagged
-    out = bench._normalized_vs_prev(
-        {"fast": 1.4, "mid": 1.4, "slow": 1.4},
-        core_total=14.0,
-        calibration={"calibration_scan_sec": 0.4},
-    )
-    assert out["host_drift_median_raw_ratio"] == 1.4
-    assert out["normalized_regressions"] == {}
-
-
-def test_uniform_same_host_regression_flags_whole_suite(
-    bench, tmp_path, monkeypatch
-):
-    """ADVICE r9 item 3: the median-drift basis absorbs a UNIFORM
-    regression on the SAME host (every query 1.4x -> drift 1.4,
-    adjusted ~1.0, nothing flags).  Arbiter: the engine-independent
-    calibration scan — same host + median drift > 1.3 + drift > 1.3x
-    the calibration swing = the code's fault, flagged whole-suite;
-    when the calibration swung comparably it is attributed to host
-    state instead (loud either way, never silent)."""
-    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")
-    host = bench._host_identity()["host_id"]
-    prev = _summary(
-        core=10.0, cal=0.4, queries={"a": 1.0, "b": 1.0, "c": 1.0}
-    )
-    prev["host_id"] = host
-    bench._persist_summary(prev, 6)
-    # uniform 1.4x with a FLAT calibration scan: the host can't account
-    # for it -> whole-suite flag
-    out = bench._normalized_vs_prev(
-        {"a": 1.4, "b": 1.4, "c": 1.4},
-        core_total=14.0,
-        calibration={"calibration_scan_sec": 0.4},
-    )
-    assert out["same_host_as_prev"] is True
-    assert out["normalized_regressions"] == {}  # per-query basis blind
-    ws = out["whole_suite_regression"]
-    assert ws["median_raw_ratio"] == 1.4
-    assert ws["drift_vs_calibration"] == 1.4
-    # uniform 1.4x with the calibration ALSO 1.4x: host state, attributed
-    out = bench._normalized_vs_prev(
-        {"a": 1.4, "b": 1.4, "c": 1.4},
-        core_total=14.0,
-        calibration={"calibration_scan_sec": 0.56},
-    )
-    assert "whole_suite_regression" not in out
-    assert "host state" in out["whole_suite_drift_attribution"]
-    # a DIFFERENT host never trips the whole-suite arbiter (cross-host
-    # drift is expected; the host fingerprint is the adjudicator)
-    prev["host_id"] = "0" * 8
-    bench._persist_summary(prev, 6)
-    out = bench._normalized_vs_prev(
-        {"a": 1.4, "b": 1.4, "c": 1.4},
-        core_total=14.0,
-        calibration={"calibration_scan_sec": 0.4},
-    )
-    assert out["same_host_as_prev"] is False
-    assert "whole_suite_regression" not in out
-
-
-def test_streaming_splits_get_their_own_drift_basis(
-    bench, tmp_path, monkeypatch
-):
-    """VERDICT r9 item 5 + the round-11 refinement: streaming figures
-    join the regression basis under the same two-bar rule with their
-    OWN median (state-store / sink costs drift independently of the
-    batch tier) — but the three CO-SCHEDULED splits
-    (running/tumbling/sliding) are attribution-only: they measure
-    residual drain on a shared source (history spans 0.05-10.4 s for
-    the same code), so the scheduling-independent 3-query WALL stands
-    in for them.  An isolated figure slower on both bases flags; a
-    co-scheduled split never does; a uniform drift flags nothing."""
-    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")
-    prev = _summary(core=10.0, cal=0.4, queries={"a": 1.0})
-    prev["streaming_query_splits_sec"] = {
-        "running": 1.0, "tumbling": 1.0, "sliding": 1.0, "curation": 1.0,
-        "lexical_retrieval": 1.0,
-    }
-    prev["streaming_3query_wall_sec"] = 3.0
-    bench._persist_summary(prev, 6)
-    out = bench._normalized_vs_prev(
-        {"a": 1.0},
-        core_total=10.0,
-        calibration={"calibration_scan_sec": 0.4},
-        streaming={
-            "streaming_3query_wall_sec": 3.1,
-            "streaming_query_splits_sec": {
-                # sliding at 9x: a residual-drain artifact — never flags
-                "running": 1.05, "tumbling": 0.95, "sliding": 9.0,
-                "curation": 1.8, "lexical_retrieval": 1.0,
-            },
-        },
-    )
-    assert out["streaming_drift_median_raw_ratio"] < 1.1
-    assert list(out["streaming_regressions"]) == ["curation"]
-    assert out["streaming_regressions"]["curation"]["raw"] == 1.8
-    # the WALL is in the basis in the co-scheduled splits' place: a
-    # 2x wall WITH supporting drift evidence flags as 3query_wall
-    out = bench._normalized_vs_prev(
-        {"a": 1.0},
-        core_total=10.0,
-        calibration={"calibration_scan_sec": 0.4},
-        streaming={
-            "streaming_3query_wall_sec": 6.0,
-            "streaming_query_splits_sec": {
-                "running": 9.0, "tumbling": 9.0, "sliding": 9.0,
-                "curation": 1.0, "lexical_retrieval": 1.0,
-            },
-        },
-    )
-    assert list(out["streaming_regressions"]) == ["3query_wall"]
-    assert out["streaming_regressions"]["3query_wall"]["raw"] == 2.0
-    # uniform streaming drift (all 1.5x): its own median absorbs it
-    out = bench._normalized_vs_prev(
-        {"a": 1.0},
-        core_total=10.0,
-        calibration={"calibration_scan_sec": 0.4},
-        streaming={
-            "streaming_3query_wall_sec": 4.5,
-            "streaming_query_splits_sec": {
-                "running": 1.5, "tumbling": 1.5, "sliding": 1.5,
-                "curation": 1.5, "lexical_retrieval": 1.5,
-            },
-        },
-    )
-    assert out["streaming_drift_median_raw_ratio"] == 1.5
-    assert out["streaming_regressions"] == {}
-
-
 def test_off_default_sf_run_never_clobbers_default_history(bench, tmp_path):
     """A verification run at sf0.01 must not overwrite the same round's
     sf0.1 history file (it did once, in round 8 — the verify-skill smoke
     replaced the driver-grain numbers): off-default SFs persist to an
-    sf-suffixed file that prior-round selection deliberately ignores."""
+    sf-suffixed file."""
     p_main = bench._persist_summary(_summary(core=30.0, sf=0.1), 8)
     p_smoke = bench._persist_summary(_summary(core=12.0, sf=0.01), 8)
-    assert p_main != p_smoke
-    assert p_main.endswith("bench_r08.json")
-    assert "sf0.01" in os.path.basename(p_smoke)
+    assert os.path.basename(p_main) == "bench_r08.json"
+    assert os.path.basename(p_smoke) == "bench_r08_sf0.01.json"
     with open(p_main) as f:
         assert json.load(f)["core_total"] == 30.0
-    # and the suffixed file never becomes a prior-round candidate
-    got = bench._load_prev_summary(current_round=9, this_sf=0.1)
-    assert got is not None and got[1]["core_total"] == 30.0
-    assert bench._load_prev_summary(current_round=9, this_sf=0.25) is None
+    with open(p_smoke) as f:
+        assert json.load(f)["core_total"] == 12.0
 
 
-def test_near_miss_takes_third_calibration_sample(
-    bench, tmp_path, monkeypatch
-):
-    """VERDICT r10 item 4: the r10 host-vs-code verdict rode on
-    drift/swing = 1.299 against the 1.3 bar — one end-of-run calibration
-    sample deciding a whole-suite attribution.  Within ±10% of the bar
-    the arbiter now takes a THIRD calibration sample, re-judges on the
-    median of pre/end/extra scans, and records a ``near_miss`` block
-    either way; outside the band the extra sample is never taken."""
-    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")
-    host = bench._host_identity()["host_id"]
-    prev = _summary(
-        core=10.0, cal=0.4, queries={"a": 1.0, "b": 1.0, "c": 1.0}
-    )
-    prev["host_id"] = host
-    bench._persist_summary(prev, 6)
-    timings = {"a": 1.4, "b": 1.4, "c": 1.4}
-
-    # In-band (drift 1.4 / swing 1.085 = 1.29): third sample taken.
-    # Median(0.45, 0.434, 0.46) = 0.45 -> swing 1.125 -> refined 1.244
-    # < 1.3 -> host attribution on the median-3 basis, near_miss kept.
-    calls = []
-
-    def recal():
-        calls.append(1)
-        return {"calibration_scan_sec": 0.46}
-
-    out = bench._normalized_vs_prev(
-        timings, core_total=14.0,
-        calibration={"calibration_scan_sec": 0.434},
-        calibration_pre={"calibration_scan_sec_pre": 0.45},
-        recalibrate=recal,
-    )
-    assert calls == [1]
-    nm = out["near_miss"]
-    assert nm["bar"] == 1.3
-    assert nm["initial_drift_vs_calibration"] == pytest.approx(1.29, abs=0.01)
-    assert sorted(nm["calibration_samples_sec"]) == [0.434, 0.45, 0.46]
-    assert nm["drift_vs_calibration_median3"] < 1.3
-    assert "whole_suite_regression" not in out
-    assert "median-3 near-miss basis" in out["whole_suite_drift_attribution"]
-
-    # Same in-band entry but the extra samples CONFIRM the code verdict:
-    # median(0.41, 0.434, 0.40) = 0.41 -> swing 1.025 -> refined 1.366.
-    out = bench._normalized_vs_prev(
-        timings, core_total=14.0,
-        calibration={"calibration_scan_sec": 0.434},
-        calibration_pre={"calibration_scan_sec_pre": 0.41},
-        recalibrate=lambda: {"calibration_scan_sec": 0.40},
-    )
-    ws = out["whole_suite_regression"]
-    assert ws["drift_vs_calibration"] > 1.3
-    assert "median-3 near-miss basis" in ws["basis"]
-    assert out["near_miss"]["calibration_swing_median3"] == ws[
-        "calibration_swing"
-    ]
-
-    # Clearly OVER the band (drift 1.4 / swing 1.0 = 1.4 > 1.43? no —
-    # 1.4 is inside [1.1818, 1.43], so use swing 0.875 -> 1.6): no
-    # extra sample, no near_miss, plain regression verdict.
-    calls.clear()
-    out = bench._normalized_vs_prev(
-        timings, core_total=14.0,
-        calibration={"calibration_scan_sec": 0.35},
-        recalibrate=recal,
-    )
-    assert calls == []
-    assert "near_miss" not in out
-    assert out["whole_suite_regression"]["drift_vs_calibration"] == 1.6
-
-
-def test_compact_contract_line_fits_driver_tail_capture():
+def test_compact_contract_line_fits_driver_tail_capture(bench):
     """VERDICT r16 item 2: BENCH_r15's contract line outgrew the driver's
     2000-char stdout tail (parsed: null — the line's start fell outside
-    the window), losing the round-over-round comparison.  bench.py now
-    prints a COMPACT final line (contract fields + scalar audit fields;
-    the full payload lives in .benchmarks/).  Pin the worst-case size:
-    every headline catalog query at a 4-digit-seconds timing must still
-    fit with margin, so adding a headline query cannot silently re-break
-    the capture."""
-    import json
-
+    the window).  bench.py prints a COMPACT final line built by
+    ``_compact_line``; the full payload lives in .benchmarks/.  Pin the
+    worst-case size through bench.py's own code: every headline catalog
+    query at a 4-digit-seconds timing, with the payload-only fields
+    present, must still fit with margin — so neither a new headline query
+    nor a new compact field can silently re-break the capture."""
     sys.path.insert(0, _REPO)
     from hadoop_pyspark_streaming_analytics_spark.plans.catalog import (
         CATALOG,
@@ -401,20 +102,25 @@ def test_compact_contract_line_fits_driver_tail_capture():
 
     headline = [s.name for s in CATALOG if s.headline]
     assert headline, "no headline queries?"
-    compact = {
+    worst = 9999.999
+    summary = {
         "metric": "headline_queries_total_wall",
-        "value": 9999.999,
+        "value": worst,
         "unit": "sec",
-        "queries": {n: 9999.999 for n in headline},
-        "sf": 0.1,
-        "core_total": 9999.999,
+        "queries": {n: worst for n in headline},
+        "queries_raw": {n: [worst] * 3 for n in headline},
+        "core_total": worst,
         "core_n": 24,
+        "sf": 0.001,
         "master": "local[32]",
         "default_parallelism": 32,
-        "streaming_3query_wall_sec": 9999.999,
-        "payload": ".benchmarks/bench_r17.json",
+        "shuffle_partitions": 32,
+        "queries_ledger": {n: {"jobs": 9999} for n in headline},
+        "streaming_3query_wall_sec": worst,
+        **bench._host_identity(),
     }
-    line = json.dumps(compact)
+    payload = os.path.join(_REPO, ".benchmarks", "bench_r99_sf0.001.json")
+    line = json.dumps(bench._compact_line(summary, payload))
     assert len(line) <= 1900, (
         f"compact contract line is {len(line)} chars — the driver tail "
         "captures 2000; trim fields or move one to the payload"

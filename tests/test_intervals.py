@@ -324,3 +324,27 @@ def test_containment_df_cap_blocks_hot_shingle_candidates(spark):
     # "plate rare pair", "rare pair shingle") is contained in doc 11's.
     assert got[(10, 11)].containment >= 0.999
     assert got[(10, 11)].intersection == got[(10, 11)].size_a
+
+
+def test_containment_collects_posting_lists_over_rare_shingles_only(spark):
+    """The ``collect_set`` posting-list aggregate sits above a LeftSemi
+    join against the df-capped rare shingles, so a hot shingle's document
+    list is never built in one aggregation buffer: the df count runs
+    first, in constant space per group."""
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"common boiler plate unique{i}") for i in range(6)]
+    )
+    sh = dedup.doc_shingles(docs, 3)
+    plan = dedup.containment_pairs_from_shingles(sh, df_cap=5, threshold=0.1)
+    lines = plan._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    at = next(i for i, line in enumerate(lines) if "collect_set" in line)
+    below = []
+    for line in lines[at + 1 :]:
+        if depth(line) <= depth(lines[at]):
+            break
+        below.append(line)
+    assert any("Join LeftSemi" in line for line in below), "\n".join(lines)

@@ -92,3 +92,33 @@ def test_streaming_progress_collector_counts_input_rows(spark, tmp_path):
             q.stop()
     finally:
         spark.streams.removeListener(collector)
+
+
+def test_headline_job_counts_are_pinned(spark, sf_dir):
+    """Job counts do not drift with the host, so they are the regression
+    signal the bench payload's ``queries_ledger`` records.  Pin four of
+    them: a streaming-twin window rollup, a join/aggregate report, the LSH
+    candidate pass and the iterative components loop.  A change that adds
+    or removes a Spark job from one of these queries must update the pin
+    on purpose."""
+    from perfbench.probes import Ledger
+
+    from hadoop_pyspark_streaming_analytics_spark.plans.catalog import get
+
+    assert spark.streams.active == []  # a live stream would add jobs
+    ledger = Ledger(spark)
+    jobs = {}
+    for name in (
+        "events_tumbling_5min",
+        "q2a_customer_summary",
+        "dedup_minhash_lsh",
+        "dedup_components",
+    ):
+        get(name).builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        jobs[name] = ledger.collect()["jobs"]
+    assert jobs == {
+        "events_tumbling_5min": 3,
+        "q2a_customer_summary": 10,
+        "dedup_minhash_lsh": 6,
+        "dedup_components": 27,
+    }
