@@ -9,8 +9,9 @@ Each query is forced end-to-end with the ``noop`` sink (computes every
 column and row; no driver collect, no result-size bias).  The full payload,
 written to .benchmarks/, adds raw samples, the streaming tier and
 ``queries_ledger``: per headline query, the Spark jobs, stages, tasks,
-executor time and bytes of the sample whose wall is reported.  Those counts
-do not drift with the host, so they are the run-to-run regression signal.
+executor time, bytes and codegen compiles of the sample whose wall is
+reported.  Those counts do not drift with the host, so they are the
+run-to-run regression signal.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
+    from hadoop_pyspark_streaming_analytics_spark.monitoring import codegen_compiles
     from hadoop_pyspark_streaming_analytics_spark.plans.catalog import CATALOG
     from hadoop_pyspark_streaming_analytics_spark.session import get_spark
     from perfbench.probes import Ledger
@@ -40,6 +42,10 @@ def main() -> None:
     # whole-stage-codegen compilation and parquet footer caches are paid
     # before measurement — bench numbers are steady-state execution, not
     # first-query JVM warm-up (which dominated: 5.2s cold vs 2.0s warm).
+    # Codegen is paid once only because get_spark sizes the codegen cache
+    # to the catalog's working set; at Spark's 100 entries every timed
+    # sample recompiled its classes.  Each ledger row's codegen_compiles
+    # shows it.
     warm_dir = "/root/testdata/sf0.001"
     import gc
 
@@ -77,11 +83,14 @@ def main() -> None:
     work_raw: dict[str, list[dict]] = {spec.name: [] for spec in specs}
 
     def _sample(spec) -> None:
+        compiles0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = spec.builder(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         timings_raw[spec.name].append(round(time.perf_counter() - t0, 3))
-        work_raw[spec.name].append(ledger.collect())  # outside the timer
+        work = ledger.collect()  # outside the timer
+        work["codegen_compiles"] = codegen_compiles(spark) - compiles0
+        work_raw[spec.name].append(work)
         gc.collect()
 
     for _pass in range(2):
@@ -106,7 +115,11 @@ def main() -> None:
     queries_ledger = {}
     for name, s in timings_raw.items():
         work = work_raw[name][s.index(timings[name])]
-        queries_ledger[name] = {"jobs": work["jobs"], **work["sums"]}
+        queries_ledger[name] = {
+            "jobs": work["jobs"],
+            "codegen_compiles": work["codegen_compiles"],
+            **work["sums"],
+        }
 
     # Tier hygiene: the batch tier leaves cached relations, checkpoint
     # blocks, and GC debt in the shared JVM — observed inflating the

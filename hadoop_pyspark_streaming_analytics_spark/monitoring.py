@@ -10,7 +10,11 @@ extra action is another full scan.  Spark provides two zero-cost hooks:
   duration, state size) pushed by the engine.  :class:`ProgressCollector`
   accumulates them for tests/dashboards.
 
-Both are JVM-side instrumentation; nothing here adds a Python hot path.
+:func:`codegen_compiles` reads the JVM's codegen compile counter, so a
+run can show whether it reused its compiled classes.
+
+All three are JVM-side instrumentation; nothing here adds a Python hot
+path.
 """
 
 from __future__ import annotations
@@ -32,6 +36,13 @@ def observed(
     if not metrics:
         metrics = (F.count(F.lit(1)).alias("rows"),)
     return df.observe(obs, *metrics), obs
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far (every
+    codegen cache miss, driver and local executors alike)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 class ProgressCollector(StreamingQueryListener):

@@ -20,8 +20,6 @@ salted hex digests — engine-portable, and exactly as uniform.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -309,7 +307,8 @@ def connected_components(
     every node takes the min label among itself and its neighbors; fixpoint
     = components, labeled by their smallest member.
 
-    Returns (node, component) for every node that appears in ``edges``.
+    Returns (node, component) for every node that appears in ``edges``;
+    raises ``RuntimeError`` when ``max_iter`` rounds reach no fixpoint.
 
     Scale notes (this is an iterative algorithm — the driver loop is
     orchestration only; every round is a distributed join + groupBy):
@@ -360,13 +359,11 @@ def connected_components(
             break
         prev_sum = new_sum
     if not converged:
-        # Diameter > max_iter would silently return WRONG labels; surface it.
-        warnings.warn(
+        # Diameter > max_iter would silently return WRONG labels.
+        raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds "
-            "(graph diameter exceeds max_iter); labels may be unconverged. "
-            "Raise max_iter or use large-star/small-star for deep graphs.",
-            RuntimeWarning,
-            stacklevel=2,
+            "(graph diameter exceeds max_iter). "
+            "Raise max_iter or use large-star/small-star for deep graphs."
         )
     return labels
 

@@ -16,6 +16,12 @@ Timezone is pinned to UTC so timestamp semantics are reproducible (the
 reference leaked a ``-05:00`` session offset into its golden CSVs —
 SURVEY.md §7).
 
+Compiled whole-stage-codegen classes sit in one JVM-global LRU cache
+(``spark.sql.codegen.cache.maxEntries``), a static conf sized here to the
+catalog's generated-class working set so repeated plans reuse their
+classes; it applies only when ``get_spark`` builds the session, and a
+vanilla session keeps Spark's 100 entries.
+
 Checkpoint durability (SCALE.md "Checkpoint durability policy", round
 17): operators pin multiply-consumed frames with
 ``localCheckpoint(eager=True)`` — executor-local, lineage-truncating,
@@ -67,6 +73,15 @@ DEFAULT_CONF: dict[str, str] = {
     # rejects by default; read it as a long (nanos since epoch) and convert
     # at the source (sources/readers.py:load_events).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Compiled whole-stage-codegen classes live in a JVM-global LRU cache
+    # whose default of 100 entries is below the working set of a session
+    # that re-runs its plans: the full catalog compiles 2,451 classes at
+    # sf0.001, so cycling through it misses on every lookup and recompiles
+    # (and re-JITs) every class on every run.  4096 is the next power of
+    # two above that.  A static conf: it takes effect only when this
+    # factory builds the JVM's first session; a vanilla session (the
+    # driver's __spark_entry__ path) keeps 100.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 

@@ -62,6 +62,16 @@ def test_connected_components_transitive_closure(spark):
     }
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    """A path longer than max_iter cannot converge; unconverged labels
+    would be silently wrong, so the loop must fail rather than warn."""
+    edges = spark.createDataFrame(
+        [(k, k + 1) for k in range(1, 6)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint after 2 rounds"):
+        dedup.connected_components(edges, max_iter=2)
+
+
 def test_keep_canonical_drops_exactly_non_canonical_members(spark):
     """Surviving corpus = all docs minus every cluster member except the
     smallest; cluster canonicals and untouched docs all survive."""
