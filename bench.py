@@ -204,17 +204,12 @@ def _round_id() -> int:
     at the END of round N, so the current round is max(existing)+1.  A
     post-round re-run (CORRECTNESS_r{N} already present for this round's
     own results) only shifts which file the summary lands in."""
-    import glob
-    import re
+    from hadoop_pyspark_streaming_analytics_spark.plans.fingerprint import (
+        correctness_rounds,
+    )
 
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(
-            os.path.join(os.path.dirname(_bench_dir()), "CORRECTNESS_r*.json")
-        )
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+    rounds = correctness_rounds(os.path.dirname(_bench_dir()))
+    return rounds[-1] + 1 if rounds else 1
 
 
 def _persist_summary(summary: dict, round_id: int) -> str:
@@ -315,7 +310,9 @@ def _bench_streaming(spark, n_rows: int = 50_000) -> dict:
     import tempfile
     import time
 
+    from hadoop_pyspark_streaming_analytics_spark.operators.corpus import bpe_merges
     from hadoop_pyspark_streaming_analytics_spark.sources.readers import (
+        load_table,
         read_sensor_stream,
     )
     from hadoop_pyspark_streaming_analytics_spark.streaming.harness import MemorySinkRun
@@ -369,11 +366,24 @@ def _bench_streaming(spark, n_rows: int = 50_000) -> dict:
     # adc, adc_pruned, lexical, curation, 3query, adc, ... — so a host
     # stall window can hit at most ONE sample of each figure, the same
     # rationale as the multibatch arms.  Min reported, raw pairs kept.
+    # The curation figures share one tokenizer merge table (a build-once
+    # artifact, trained outside every timed window) and one document set.
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    merges = [
+        (r["lft"], r["rgt"])
+        for r in bpe_merges(spark, sf_dir).orderBy("step").collect()
+    ]
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .limit(5_000)
+        .collect()
+    )
     with (
         _streaming_retrieval_sampler(spark) as adc,
         _streaming_retrieval_sampler(spark, nprobe=2) as adcp,
         _streaming_lexical_sampler(spark) as lex,
-        _streaming_curation_sampler(spark) as cur,
+        _streaming_curation_sampler(spark, merges, docs) as cur,
     ):
         # 3-query warm-up AFTER the other samplers' setup/warm-up work,
         # immediately before the first measured sample — setup churn
@@ -401,8 +411,8 @@ def _bench_streaming(spark, n_rows: int = 50_000) -> dict:
         splits[name] = min(raw[name])
     splits["curation"] = min(curs)
     raw["curation"] = curs
-    multibatch = _bench_streaming_curation_multibatch(spark)
-    seg_multibatch = _bench_streaming_segment_scrub_multibatch(spark)
+    multibatch = _bench_streaming_curation_multibatch(spark, merges, docs)
+    seg_multibatch = _bench_streaming_segment_scrub_multibatch(spark, docs)
     return {
         "streaming_3query_rows": n_rows,
         "streaming_3query_wall_sec": wall,
@@ -420,6 +430,33 @@ def _bench_streaming(spark, n_rows: int = 50_000) -> dict:
         # segment-frequency store compaction figures (VERDICT r12 item 5)
         **seg_multibatch,
     }
+
+
+def _drain(spark, schema: str, watch: str, handler, ckpt: str, **options) -> None:
+    """Run one ``foreachBatch`` stream over the JSON files in ``watch``
+    until every file is processed, then stop it."""
+    q = (
+        spark.readStream.schema(schema)
+        .options(**options)
+        .json(watch)
+        .writeStream.foreachBatch(handler)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _write_docs(watch: str, docs: list, n_files: int = 1) -> None:
+    """Write ``docs`` (rows of doc_id, text) as JSON lines, split evenly
+    over ``n_files`` files named in stream order."""
+    per = max(1, len(docs) // n_files)
+    for i in range(n_files):
+        with open(f"{watch}/b{i:02d}.json", "w") as f:
+            for r in docs[i * per : (i + 1) * per]:
+                f.write(json.dumps({"doc_id": r["doc_id"], "text": r["text"]}) + "\n")
 
 
 @contextlib.contextmanager
@@ -469,19 +506,10 @@ def _streaming_lexical_sampler(spark, n_queries: int = 32):
             work = tempfile.mkdtemp(prefix="bench_bm25_")
             try:
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.schema(
-                        "query_id long, terms array<string>"
-                    )
-                    .json(watch)
-                    .writeStream.foreachBatch(
-                        foreach_batch_bm25_topk(idx, f"{work}/hits")
-                    )
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "query_id long, terms array<string>", watch,
+                    foreach_batch_bm25_topk(idx, f"{work}/hits"), f"{work}/ckpt",
                 )
-                q.processAllAvailable()
-                q.stop()
                 return round(time.perf_counter() - t0, 3)
             finally:
                 shutil.rmtree(work, ignore_errors=True)
@@ -494,65 +522,40 @@ def _streaming_lexical_sampler(spark, n_queries: int = 32):
 
 
 @contextlib.contextmanager
-def _streaming_curation_sampler(spark, n_docs: int = 5_000):
+def _streaming_curation_sampler(spark, merges: list, docs: list):
     """The streaming curation pipeline end-to-end (VERDICT r5 item 6): one
-    micro-batch of ``n_docs`` raw documents through ingest → model quality
+    micro-batch of the ``docs`` rows through ingest → model quality
     gate → LSH near-dup dedup (fresh band store) → BPE tokenize → parquet,
     via the foreach_batch_curation handler under a real writeStream.  The
-    tokenizer merge table is trained OUTSIDE the timed window (build-once
-    artifact, like the PQ index for adc_retrieval).  Yields a
-    measured-sample callable returning (wall, stage dict) — setup +
-    warm-up paid — for _bench_streaming's interleaved round-robin."""
-    import json as _json
+    tokenizer ``merges`` are trained by the caller, OUTSIDE the timed
+    window (build-once artifact, like the PQ index for adc_retrieval).
+    Yields a measured-sample callable returning (wall, stage dict) —
+    setup + warm-up paid — for _bench_streaming's interleaved round-robin."""
     import shutil
     import tempfile
     import time
 
-    from hadoop_pyspark_streaming_analytics_spark.operators.corpus import bpe_merges
-    from hadoop_pyspark_streaming_analytics_spark.sources.readers import load_table
     from hadoop_pyspark_streaming_analytics_spark.streaming.extensions import (
         foreach_batch_curation,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    merges = [
-        (r["lft"], r["rgt"])
-        for r in bpe_merges(spark, sf_dir).orderBy("step").collect()
-    ]
     watch = tempfile.mkdtemp(prefix="bench_curation_q_")
     try:
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .limit(n_docs)
-            .collect()
-        )
-        with open(f"{watch}/b0.json", "w") as f:
-            for r in rows:
-                f.write(
-                    _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                    + "\n"
-                )
+        _write_docs(watch, docs)
 
         def run_once() -> tuple[float, dict]:
             work = tempfile.mkdtemp(prefix="bench_curation_")
             stages: dict[str, float] = {}
             try:
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .json(watch)
-                    .writeStream.foreachBatch(
-                        foreach_batch_curation(
-                            f"{work}/bands", f"{work}/out", merges,
-                            stage_times=stages,
-                        )
-                    )
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "doc_id long, text string", watch,
+                    foreach_batch_curation(
+                        f"{work}/bands", f"{work}/out", merges,
+                        stage_times=stages,
+                    ),
+                    f"{work}/ckpt",
                 )
-                q.processAllAvailable()
-                q.stop()
                 return round(time.perf_counter() - t0, 3), stages
             finally:
                 shutil.rmtree(work, ignore_errors=True)
@@ -564,7 +567,7 @@ def _streaming_curation_sampler(spark, n_docs: int = 5_000):
 
 
 def _bench_streaming_curation_multibatch(
-    spark, n_docs: int = 5_000, n_batches: int = 10
+    spark, merges: list, docs: list, n_batches: int = 10
 ) -> dict:
     """Sustained-ingest curation (VERDICT r7 item 5): the SAME document
     volume as the single-batch figure, fed as ``n_batches`` micro-batches
@@ -608,38 +611,17 @@ def _bench_streaming_curation_multibatch(
     in production (streaming/extensions.py:vacuum_cadence docstring) —
     single sample: the figure prices a sub-second control-plane op,
     not a paired claim."""
-    import json as _json
     import shutil
     import tempfile
     import time
 
-    from hadoop_pyspark_streaming_analytics_spark.operators.corpus import bpe_merges
-    from hadoop_pyspark_streaming_analytics_spark.sources.readers import load_table
     from hadoop_pyspark_streaming_analytics_spark.streaming.extensions import (
         foreach_batch_curation,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    merges = [
-        (r["lft"], r["rgt"])
-        for r in bpe_merges(spark, sf_dir).orderBy("step").collect()
-    ]
     watch = tempfile.mkdtemp(prefix="bench_curation_mb_q_")
     try:
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .limit(n_docs)
-            .collect()
-        )
-        per = max(1, len(rows) // n_batches)
-        for i in range(n_batches):
-            with open(f"{watch}/b{i:02d}.json", "w") as f:
-                for r in rows[i * per : (i + 1) * per]:
-                    f.write(
-                        _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                        + "\n"
-                    )
+        _write_docs(watch, docs, n_batches)
 
         def run_once(compact_every, vacuum: bool = False) -> tuple[float, dict]:
             work = tempfile.mkdtemp(prefix="bench_curation_mb_")
@@ -688,16 +670,10 @@ def _bench_streaming_curation_multibatch(
 
             try:
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .json(watch)
-                    .writeStream.foreachBatch(handler)
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "doc_id long, text string", watch, handler,
+                    f"{work}/ckpt", maxFilesPerTrigger=1,
                 )
-                q.processAllAvailable()
-                q.stop()
                 stages["fold_total"] = round(fold_total[0], 3)
                 return round(time.perf_counter() - t0, 3), stages
             finally:
@@ -713,24 +689,15 @@ def _bench_streaming_curation_multibatch(
         try:
             for i in range(2):
                 os.link(f"{watch}/b{i:02d}.json", f"{warm}/b{i:02d}.json")
-            run_once_dir = warm
             work = tempfile.mkdtemp(prefix="bench_curation_mb_w_")
             try:
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .json(run_once_dir)
-                    .writeStream.foreachBatch(
-                        foreach_batch_curation(
-                            f"{work}/bands", f"{work}/out", merges,
-                            compact_every=2,
-                        )
-                    )
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "doc_id long, text string", warm,
+                    foreach_batch_curation(
+                        f"{work}/bands", f"{work}/out", merges, compact_every=2
+                    ),
+                    f"{work}/ckpt", maxFilesPerTrigger=1,
                 )
-                q.processAllAvailable()
-                q.stop()
             finally:
                 shutil.rmtree(work, ignore_errors=True)
         finally:
@@ -771,7 +738,7 @@ def _bench_streaming_curation_multibatch(
 
 
 def _bench_streaming_segment_scrub_multibatch(
-    spark, n_docs: int = 5_000, n_batches: int = 10
+    spark, docs: list, n_batches: int = 10
 ) -> dict:
     """Sustained-ingest segment scrubbing (VERDICT r12 item 5): the
     segment-frequency store is the newest generational store, and until
@@ -791,34 +758,18 @@ def _bench_streaming_segment_scrub_multibatch(
 
     TWO samples per arm, interleaved, min reported, raw pairs kept —
     the multibatch protocol above, same host-drift rationale."""
-    import json as _json
     import shutil
     import tempfile
     import time
 
-    from hadoop_pyspark_streaming_analytics_spark.sources.readers import load_table
     from hadoop_pyspark_streaming_analytics_spark.streaming.extensions import (
         compact_segment_store,
         foreach_batch_segment_scrub,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     watch = tempfile.mkdtemp(prefix="bench_segscrub_mb_q_")
     try:
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .limit(n_docs)
-            .collect()
-        )
-        per = max(1, len(rows) // n_batches)
-        for i in range(n_batches):
-            with open(f"{watch}/b{i:02d}.json", "w") as f:
-                for r in rows[i * per : (i + 1) * per]:
-                    f.write(
-                        _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                        + "\n"
-                    )
+        _write_docs(watch, docs, n_batches)
 
         def run_once(compact_every) -> tuple[float, float]:
             work = tempfile.mkdtemp(prefix="bench_segscrub_mb_")
@@ -838,16 +789,10 @@ def _bench_streaming_segment_scrub_multibatch(
 
             try:
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .json(watch)
-                    .writeStream.foreachBatch(handler)
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "doc_id long, text string", watch, handler,
+                    f"{work}/ckpt", maxFilesPerTrigger=1,
                 )
-                q.processAllAvailable()
-                q.stop()
                 return (
                     round(time.perf_counter() - t0, 3),
                     round(fold_total[0], 3),
@@ -865,20 +810,11 @@ def _bench_streaming_segment_scrub_multibatch(
                 os.link(f"{watch}/b{i:02d}.json", f"{warm}/b{i:02d}.json")
             work = tempfile.mkdtemp(prefix="bench_segscrub_mb_w_")
             try:
-                q = (
-                    spark.readStream.schema("doc_id long, text string")
-                    .option("maxFilesPerTrigger", 1)
-                    .json(warm)
-                    .writeStream.foreachBatch(
-                        foreach_batch_segment_scrub(
-                            f"{work}/segs", f"{work}/out"
-                        )
-                    )
-                    .option("checkpointLocation", f"{work}/ckpt")
-                    .start()
+                _drain(
+                    spark, "doc_id long, text string", warm,
+                    foreach_batch_segment_scrub(f"{work}/segs", f"{work}/out"),
+                    f"{work}/ckpt", maxFilesPerTrigger=1,
                 )
-                q.processAllAvailable()
-                q.stop()
             finally:
                 shutil.rmtree(work, ignore_errors=True)
         finally:
@@ -971,19 +907,11 @@ def _streaming_retrieval_sampler(
             out = tempfile.mkdtemp(prefix="bench_adc_out_")
             try:
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.schema("query_id bigint, q_emb array<float>")
-                    .json(watch)
-                    .writeStream.foreachBatch(
-                        foreach_batch_adc_topk(
-                            sf_dir, out, codes_path=idx, nprobe=nprobe
-                        )
-                    )
-                    .option("checkpointLocation", ckpt)
-                    .start()
+                _drain(
+                    spark, "query_id bigint, q_emb array<float>", watch,
+                    foreach_batch_adc_topk(sf_dir, out, codes_path=idx, nprobe=nprobe),
+                    ckpt,
                 )
-                q.processAllAvailable()
-                q.stop()
                 return round(time.perf_counter() - t0, 3)
             finally:
                 shutil.rmtree(ckpt, ignore_errors=True)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .text import STOP_WORDS, TOKEN_PATTERN
 
@@ -99,15 +100,13 @@ def ngram_jaccard_pairs(
     quadratically) — at 100 TB you front this with the MinHash-LSH candidate
     generator below and only Jaccard-verify the candidates.
     """
-    # localCheckpoint, not .cache(): the shingle table feeds both the sizes
+    # A pin, not .cache(): the shingle table feeds both the sizes
     # agg and the self-join, but a cache() here would outlive the query (the
     # caller never sees the handle to unpersist), accumulating storage
     # memory across repeated catalog runs in one long-lived session.
     # Checkpoint blocks are reclaimed by the ContextCleaner when the frame
     # is GC'd.
-    sh = doc_shingles(load_table(spark, sf_dir, "documents"), n).localCheckpoint(
-        eager=True
-    )
+    sh = doc_shingles(load_table(spark, sf_dir, "documents"), n).transform(pin)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -218,7 +217,7 @@ def minhash_lsh_candidates(
     # signature pass runs exactly once.
     buckets = lsh_band_buckets(
         load_table(spark, sf_dir, "documents"), n, bands, rows
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     return candidates_from_buckets(buckets)
 
 
@@ -319,7 +318,7 @@ def connected_components(
       alternation (Kiveris et al., "Connected Components in MapReduce and
       Beyond", SoCC'14) which converges in O(log^2 n) rounds; not needed for
       dedup workloads.
-    * ``localCheckpoint(eager=True)`` per round truncates lineage — without
+    * ``pin`` per round truncates lineage — without
       it round k replays rounds 1..k-1 and the plan grows exponentially.
     * Convergence probe: min-propagation is MONOTONE (labels only ever
       decrease), so fixpoint ⟺ sum(component) unchanged — one scalar agg
@@ -331,13 +330,13 @@ def connected_components(
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     prev_sum = labels.agg(F.sum("component")).first()[0]
     converged = False
@@ -351,7 +350,7 @@ def connected_components(
             labels.union(neighbor_min)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
         new_sum = labels.agg(F.sum("component")).first()[0]
         if new_sum == prev_sum:
@@ -452,12 +451,12 @@ def edit_distance_verify(
     re-executed the LSH candidate subtree per consumer (4 documents
     scans total; now the LSH pipeline's own passes + one pruned text
     attach).  JVM built-in (``levenshtein``), no Python."""
-    cands = minhash_lsh_candidates(spark, sf_dir).localCheckpoint(eager=True)
+    cands = minhash_lsh_candidates(spark, sf_dir).transform(pin)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     needed = cands.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
-    side_texts = docs.join(needed, "doc_id").localCheckpoint(eager=True)
+    side_texts = docs.join(needed, "doc_id").transform(pin)
     paired = (
         cands.join(
             side_texts.select(
@@ -511,7 +510,7 @@ def keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     qual = (
         quality_scores(spark, sf_dir)
         .select("doc_id", "quality_score")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     comp = duplicate_components(spark, sf_dir)
     w = Window.partitionBy("component").orderBy(
@@ -563,10 +562,8 @@ def split_leakage_check(
     # the returned plan carried FOUR documents scans.  The candidate
     # pair table is the LSH tier's own bounded output (bands cap the
     # per-bucket fan-out); pinned, the LSH pass runs once.
-    cand = minhash_lsh_candidates(spark, sf_dir, n).localCheckpoint(
-        eager=True
-    )
-    sh = doc_shingles(docs, n).localCheckpoint(eager=True)
+    cand = minhash_lsh_candidates(spark, sf_dir, n).transform(pin)
+    sh = doc_shingles(docs, n).transform(pin)
 
     def split_of(col: str):
         bucket = F.conv(
@@ -641,7 +638,7 @@ def exact_substring_pairs(
         )
         .distinct()
         # feeds the df screen AND both sides of the pair join
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     rare = wins.groupBy("h").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= max_df
@@ -689,18 +686,17 @@ def minhash_estimate_pairs(
     """
     docs = load_table(spark, sf_dir, "documents")
     num_perm = bands * rows
-    sh_raw = doc_shingles(docs, n, distinct=False).localCheckpoint(eager=True)
-    sigs = minhash_signatures(sh_raw, num_perm).localCheckpoint(eager=True)
+    sh_raw = doc_shingles(docs, n, distinct=False).transform(pin)
+    sigs = minhash_signatures(sh_raw, num_perm).transform(pin)
     # Round-17: ``cand`` has THREE consumers below (the estimate join
     # chain + candidate_jaccard's intersection build + its left-join
     # base), and unpinned each re-ran the band digest + self-join +
     # distinct over the pinned signatures — no extra scans (the scan
     # census is blind to it) but 3x the LSH candidate-generation
-    # shuffle per action.  Pair-grain, LSH-collision bounded — a
-    # Tier-1 pin (SCALE.md "Checkpoint durability policy").
+    # shuffle per action.  Pair-grain, LSH-collision bounded.
     cand = candidates_from_buckets(
         band_buckets_from_sigs(sigs, bands, rows)
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(num_perm)],
@@ -849,7 +845,7 @@ def incremental_ingest(
         "is_new",
         "prio",
         F.md5(normalized_text(F.col("text"))).alias("fingerprint"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     fmin = fp.groupBy("fingerprint").agg(F.min("prio").alias("min_prio"))
     exact_dropped = (
         fp.join(fmin, "fingerprint")
@@ -858,10 +854,8 @@ def incremental_ingest(
         .distinct()
     )
     # --- near-dup tier: new docs probe the band index ---
-    sh_raw = doc_shingles(docs, n, distinct=False).localCheckpoint(eager=True)
-    sigs = minhash_signatures(sh_raw, LSH_BANDS * LSH_ROWS).localCheckpoint(
-        eager=True
-    )
+    sh_raw = doc_shingles(docs, n, distinct=False).transform(pin)
+    sigs = minhash_signatures(sh_raw, LSH_BANDS * LSH_ROWS).transform(pin)
     buckets = band_buckets_from_sigs(sigs)
     new_ids = fp.filter(F.col("is_new") == 1).select("doc_id")
     newb = buckets.join(new_ids, "doc_id")
@@ -1051,11 +1045,9 @@ def containment_pairs(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Catalog face of :func:`containment_pairs_from_shingles` over the
-    documents table.  Same localCheckpoint rationale as
+    documents table.  Same pin rationale as
     ngram_jaccard_pairs: the shingle frame feeds candidate generation,
     intersection scoring, and sizes — without it the tokenize+explode
     replays three times."""
-    sh = doc_shingles(load_table(spark, sf_dir, "documents"), n).localCheckpoint(
-        eager=True
-    )
+    sh = doc_shingles(load_table(spark, sf_dir, "documents"), n).transform(pin)
     return containment_pairs_from_shingles(sh, df_cap, threshold)

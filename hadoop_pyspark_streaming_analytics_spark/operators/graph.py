@@ -13,7 +13,7 @@ propagation) and follows the same execution discipline:
 * the symmetrized edge list is ``repartition("u") + persist``'ed ONCE —
   it is re-joined every round, and without the pin each round would
   replay the whole shingle→minhash→LSH pipeline (persist, not
-  localCheckpoint: checkpointing erases the plan's outputPartitioning
+  a pin: checkpointing erases the plan's outputPartitioning
   into UnknownPartitioning, which would re-shuffle the edge side every
   round — both caches are unpersisted once the result is materialized);
 * each round is one distributed join + map-side-combined groupBy (mass =
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .dedup import minhash_lsh_candidates
 
 PAGERANK_DAMPING = 0.85
@@ -64,7 +65,7 @@ def pagerank_similar_docs(
     )
     # Degree attaches ONCE (it never changes across rounds), and the
     # edges+degree frame is hash-partitioned on the per-round join key
-    # and CACHED — persist (unlike localCheckpoint, which erases plan
+    # and CACHED — persist (unlike a pin, which erases plan
     # partitioning into UnknownPartitioning) keeps the cached plan's
     # outputPartitioning/ordering visible to Catalyst, so no round pays
     # an edge-side exchange, a re-sort, or a repeated degree join; the
@@ -82,19 +83,17 @@ def pagerank_similar_docs(
                 sym.select("u")
                 .distinct()
                 .agg(F.count(F.lit(1)).alias("n_nodes"))
-                .localCheckpoint(eager=True)  # 1 row; computed once
+                .transform(pin)  # 1 row; computed once
             )
             ranks = (
                 sym.select(F.col("u").alias("node"))
                 .distinct()
                 .crossJoin(F.broadcast(n))
                 .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("pr"))
-                .localCheckpoint(eager=True)
+                .transform(pin)
             )
             for _ in range(iters):
-                ranks = _pagerank_round(edges, ranks, n, damping).localCheckpoint(
-                    eager=True
-                )
+                ranks = _pagerank_round(edges, ranks, n, damping).transform(pin)
             # Materialize THROUGH the caches before releasing them —
             # returning a lazy plan and unpersisting would silently
             # replay the whole LSH pipeline at the caller's first
@@ -108,7 +107,7 @@ def pagerank_similar_docs(
                     F.col("degree").cast("int").alias("degree"),
                     F.round(F.col("pr") + F.lit(1e-8), 6).alias("pagerank"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(pin)
             )
         finally:
             edges.unpersist(blocking=False)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round2
+from ..session import pin
 from ..sources.readers import load_events
 
 #: Default bin width for the time axis, in seconds.  One hour ~ the padded
@@ -134,13 +135,12 @@ def error_bursts_merged(ev: DataFrame, gap: str = "5 minutes") -> DataFrame:
     # consumes the day-local bursts twice, and unpinned each side re-ran
     # the error scan + sessionization (census: 2 events scans).  The
     # frame is burst-grain — one row per day-local session, orders of
-    # magnitude below event grain — a bounded Tier-1 pin (SCALE.md
-    # "Checkpoint durability policy").  Phase 1 IS :func:`error_bursts`
+    # magnitude below event grain.  Phase 1 IS :func:`error_bursts`
     # (previously inlined verbatim); calling it keeps the
     # day-partitioned-sessionization contract testable on the unpinned
     # subtree (test_intervals) now that the pin hides it from the
     # returned plan.
-    bursts = error_bursts(ev, gap).localCheckpoint(eager=True)
+    bursts = error_bursts(ev, gap).transform(pin)
     day_start = F.date_trunc("day", F.col("burst_start"))
     next_midnight = day_start + F.expr("INTERVAL 1 DAY")
     # backward-mergeable: some prev-day error (strictly before midnight)

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .quality import token_counts
 
@@ -83,9 +84,9 @@ def unimax_of(
         # source-count-sized frame — without lineage truncation Spark
         # re-executes the corpus-sized token-count aggregate once PER
         # consumer (plan-audited at 3x before this pin; at 100 TB that is
-        # two needless full-corpus scans).  localCheckpoint over cache so
+        # two needless full-corpus scans).  A pin, not cache, so
         # the replayed plan cannot silently fall back to recompute.
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     alloc_in = per_source.where(
         F.col("tokens_available").isNotNull()

@@ -12,7 +12,7 @@ Spark-first training shape (the kmeans/pagerank iterative pattern):
 
 * features are ONE dense ``LR_BUCKETS``-double array per document
   (map-side build: explode tokens → bucket counts → dense vector),
-  localCheckpoint'ed once;
+  pinned once;
 * every GD step is a SINGLE map-side-combinable aggregate — the current
   weights enter as a literal array, the per-doc sigmoid and residual are
   codegen expressions, and the gradient is ``LR_BUCKETS`` sum columns in
@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .text import TOKEN_PATTERN
 
@@ -176,7 +177,7 @@ def quality_model_scores(
     """Train the quality classifier on the documents table (reference =
     ``targets`` sources) and score every featurizable document."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = doc_features(docs, targets).localCheckpoint(eager=True)
+    feats = doc_features(docs, targets).transform(pin)
     w = train_quality_lr(feats, steps=steps, lr=lr)
     return score_documents(feats, w)
 
@@ -196,7 +197,7 @@ def quality_model_report(
     silently looking fully covered; mean_score / keep_frac average over
     the scored docs only (NULL for a source with none)."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = doc_features(docs, targets).localCheckpoint(eager=True)
+    feats = doc_features(docs, targets).transform(pin)
     w = train_quality_lr(feats, steps=steps, lr=lr)
     per_doc = docs.select("doc_id", "source").join(
         score_documents(feats, w), "doc_id", "left"

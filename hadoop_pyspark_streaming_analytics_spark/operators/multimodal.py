@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 
 # The mapInPandas closures below reference this module's helpers
@@ -656,7 +657,7 @@ def image_near_duplicates(
 
     hashes = payloads.mapInPandas(
         hash_batch, schema="doc_id bigint, ahash bigint"
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
 
     bands = hashes.select(
         "doc_id",

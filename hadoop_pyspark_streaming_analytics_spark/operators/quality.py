@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .dedup import normalized_text
 from .text import STOP_WORDS, TOKEN_PATTERN
@@ -516,7 +517,7 @@ def language_mixture_temperature_sample(
     parallelize perfectly and nothing corpus-sized shuffles.
 
     The language-grain totals frame has TWO consumers (the min_tokens
-    scalar and the rate crossJoin), so it is ``localCheckpoint``-pinned
+    scalar and the rate crossJoin), so it is pinned
     (the corpus.py:260 "N consumers, one scan" convention) — the unpinned
     plan re-executed the corpus-sized totals pass per consumer (3 parquet
     scans; one needless full-corpus pass at 100 TB).  Post-pin the
@@ -528,7 +529,7 @@ def language_mixture_temperature_sample(
     lang_tokens = (
         docs.groupBy("lang")
         .agg(F.sum("n_tokens").alias("lang_tokens"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     min_toks = lang_tokens.agg(F.min("lang_tokens").alias("min_tokens"))
     lang_rates = (
@@ -686,7 +687,7 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep=("source", "fingerprint"),
     ).select(
         "doc_id", "source", "fingerprint", "word_count", "quality_score"
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     dup_counts = enriched.groupBy("fingerprint").agg(
         F.count(F.lit(1)).alias("n_copies")
     )
@@ -728,16 +729,15 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     back), and each re-ran the full text scan + feature expressions
     unpinned — the round-17 census caught 2 documents scans.  The
     pinned frame is the narrow (doc_id, source, quality_score)
-    projection, ~20 B/doc — a Tier-2 proxy (SCALE.md "Checkpoint
-    durability policy"): 20 bytes/doc buys back a full corpus
-    text pass.
+    projection, ~20 B/doc: 20 bytes/doc buys back a full corpus text
+    pass.
     """
     feats = (
         quality_features(
             load_table(spark, sf_dir, "documents"), keep=("source",)
         )
         .select("doc_id", "source", "quality_score")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     cuts = feats.groupBy("source").agg(
         F.expr(

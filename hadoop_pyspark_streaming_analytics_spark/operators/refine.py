@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .similarity import PQ_K, PQ_M, PQ_SUBDIM, adc_topk_for_queries, l2sq_expr
 
@@ -56,7 +57,7 @@ def _corpus_and_queries(spark, sf_dir, query_ids):
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     return emb, queries
 
@@ -171,12 +172,12 @@ def adc_refine_recall_report(
     truth = (
         _exact_topk(emb, queries, k)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     adc = (
         adc_topk_for_queries(emb, queries, shortlist)
         .select("query_id", "vec_id", F.col("rk").alias("adc_rank"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     refined = exact_rerank(emb, queries, adc, k).select(
         "query_id", "vec_id"

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from ..functions.rounding import round2
 from .cleaning import star_clean_predicates
@@ -299,7 +300,7 @@ def segment_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # segment-grain frame — checkpoint-pinned so the orders x
         # customer join runs once, not per consumer (round-15 census:
         # the unpinned plan scanned both tables twice).
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     total = seg.agg(F.sum("segment_total").alias("grand_total"))
     return seg.crossJoin(F.broadcast(total)).select(

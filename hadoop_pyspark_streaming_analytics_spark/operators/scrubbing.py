@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round4
+from ..session import pin
 from ..sources.readers import load_table
 from .text import TOKEN_PATTERN
 
@@ -152,7 +153,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # grams feeds both the benchmark set and the training probe; without a
     # checkpoint the corpus is scanned+tokenized+gram-exploded twice.
-    grams = _doc_ngrams(docs).localCheckpoint(eager=True)
+    grams = _doc_ngrams(docs).transform(pin)
     bench = (
         grams.filter(F.col("doc_id") % BENCHMARK_MOD == 0)
         .select("gram")
@@ -262,7 +263,7 @@ def contamination_check_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     (estimate cheap, verify exact).
     """
     docs = load_table(spark, sf_dir, "documents")
-    grams = _doc_ngrams(docs).localCheckpoint(eager=True)
+    grams = _doc_ngrams(docs).transform(pin)
     bench = grams.filter(F.col("doc_id") % BENCHMARK_MOD == 0).select("gram").distinct()
     words = _bloom_build_words(bench, "gram")
 

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_table
 from .text import TOKEN_PATTERN
 
@@ -220,9 +221,7 @@ def boilerplate_loss_report(
     # aggregate prices totals AND drops together.  Two source passes
     # remain (the per-source doc census + this fused segment pass) plus
     # the offender aggregate's own pass behind its checkpoint — 3 total.
-    offenders = common_segments(segs, max_doc_freq).localCheckpoint(
-        eager=True
-    )
+    offenders = common_segments(segs, max_doc_freq).transform(pin)
     seg_tokens = F.size(F.split("segment", " "))
     # no broadcast hint — same adversarial-boilerplate rationale as
     # scrub_against_offenders (AQE broadcasts the small expected case)

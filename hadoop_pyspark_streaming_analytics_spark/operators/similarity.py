@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import pin
 from ..sources.readers import load_table
 
 # Ship Python-worker closures by VALUE (see operators/multimodal.py): a
@@ -390,7 +391,7 @@ def ivf_search(
     if centroids is not None:
         cents = centroids
     else:
-        cents = lowid_centroids(emb, n_centroids).localCheckpoint(eager=True)
+        cents = lowid_centroids(emb, n_centroids).transform(pin)
     assign = _assign_to_centroids(emb, cents).select("vec_id", "centroid_id")
     queries = emb.filter(F.col("vec_id").isin(*query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -527,7 +528,7 @@ def embedding_near_duplicates_lsh(
     # proxy, bands× the corpus row count but WITHOUT the 64-float
     # payload; checkpoint-pinned, the signature pass runs once and both
     # join sides read the materialized rows.
-    sigs = _band_signatures(emb, bands, rows).localCheckpoint(eager=True)
+    sigs = _band_signatures(emb, bands, rows).transform(pin)
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = (
         a.join(b, on=["band_id", "sig"])
@@ -690,7 +691,7 @@ def pq_adc_topk(
     # embeddings scans total).  Pass a checkpointed PQ_K-row codebook so
     # the shared core's both consumers read the materialized rows — the
     # corpus scan itself already runs exactly once.
-    cents = pq_codebook(emb).localCheckpoint(eager=True)
+    cents = pq_codebook(emb).transform(pin)
     return adc_topk_for_queries(emb, queries, k, cents=cents)
 
 
@@ -925,7 +926,7 @@ def adc_topk_for_queries(
             # checkpoint-pinned, mirroring the cents= callers that pass
             # a materialized codebook (pq_adc_topk since round 16, the
             # indexed path since round 12).
-            cents = pq_codebook(emb).localCheckpoint(eager=True)
+            cents = pq_codebook(emb).transform(pin)
         if codes is None:
             # Deliberately NOT semi-join-gated by ``cand``: assigning codes
             # only to probed vectors reads as a saving (the argmin is the
@@ -1147,7 +1148,7 @@ def ivf_cell_stats(
             F.round(F.avg("cosine") + F.lit(1e-8), 4).alias("avg_cos"),
             F.round(F.min("cosine") + F.lit(1e-8), 4).alias("min_cos"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     total = stats.agg(F.sum("n_vecs").alias("n_total"))
     return (
@@ -1343,7 +1344,7 @@ def ivf_pq_search_indexed_entry(
     build the materialized index into a scratch directory, run the
     partition-pruned search against it (the kmeans-retrain convention —
     each catalog entry stands alone; production materializes once and
-    searches forever), then localCheckpoint the |queries|·k-row result so
+    searches forever), then pin the |queries|·k-row result so
     the scratch index can be DELETED before returning — no tempdir
     accumulation across driver/bench runs.  Result-identical to
     :func:`ivf_pq_search`, so it shares that entry's composed oracle
@@ -1356,9 +1357,7 @@ def ivf_pq_search_indexed_entry(
     path = tempfile.mkdtemp(prefix="pq_index_entry_")
     try:
         materialize_pq_index(spark, sf_dir, path)
-        return ivf_pq_search_indexed(spark, sf_dir, path).localCheckpoint(
-            eager=True
-        )
+        return ivf_pq_search_indexed(spark, sf_dir, path).transform(pin)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -1416,7 +1415,7 @@ def semdedup(
     the embedding through (``first`` over a vec_id group is total — one
     emb row per id fans out over k broadcast centroids, so every group row
     holds the same vector), so no corpus x corpus re-attach join exists.
-    ``members`` is then ``localCheckpoint``-pinned (the corpus.py:260
+    ``members`` is then pinned (the corpus.py:260
     "N consumers, one scan" convention): its three consumers — both self-
     join sides and the final keep projection — read the one materialized
     cell-tagged frame instead of re-executing the scan+assign subtree.
@@ -1425,8 +1424,7 @@ def semdedup(
     re-scan) — four needless full-corpus passes at 100 TB; post-pin the
     returned plan carries ZERO file scans (test_similarity plan pin).  The
     pinned frame is the (vec_id, centroid_id, embedding) projection, one
-    row per vector carrying its full embedding — corpus-grain, a Tier-2
-    pin (SCALE.md "Checkpoint durability policy"): the one corpus-sized
+    row per vector carrying its full embedding: the one corpus-sized
     payload pin buys back four full corpus passes.  The
     drop set aggregates to DISTINCT ids (bounded by the duplicate count,
     << corpus) and joins back as a small side.  Cell skew bounds the
@@ -1474,7 +1472,7 @@ def semdedup(
             (-F.col("m.neg_id")).cast("bigint").alias("centroid_id"),
             "embedding",
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     a = members.select(
         "centroid_id",
@@ -1602,14 +1600,14 @@ def ivf_recall_curve(
     # post-fix the corpus is read exactly three times, once each —
     # assignment build, candidate scoring, exact ground truth — the
     # minimum a recall report against exact truth admits.
-    cents = lowid_centroids(emb, n_centroids).localCheckpoint(eager=True)
+    cents = lowid_centroids(emb, n_centroids).transform(pin)
     assign = _assign_to_centroids(emb, cents).select("vec_id", "centroid_id")
     queries = (
         emb.filter(F.col("vec_id").isin(*query_ids))
         .select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     probe_scored = queries.crossJoin(F.broadcast(cents)).withColumn(
         "ccos", F.round(cosine_expr("q_emb", "c_emb") + F.lit(1e-8), 6)
@@ -1628,12 +1626,12 @@ def ivf_recall_curve(
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("cosine", cosine_expr("q_emb", "embedding"))
         .select("query_id", "vec_id", "pr", "cosine")
-        .localCheckpoint(eager=True)  # one scoring pass feeds every point
+        .transform(pin)  # one scoring pass feeds every point
     )
     exact_ids = (
         brute_force_topk(spark, sf_dir, query_ids, k)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     points = []
     for p in sorted(nprobes):

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_events
 
 
@@ -80,7 +81,7 @@ def rolling_distinct_users(
     daily = (
         _daily(spark, sf_dir)
         .select("event_day", "sketch")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     a = daily.alias("a")
     b = daily.alias("b")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round2, round4
+from ..session import pin
 from ..sources.readers import load_table
 
 #: Predicate constants (testdata dates span 1995-01..2001-11, 5 segments,
@@ -564,7 +565,7 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     brand_lines = li.join(part, li.l_partkey == part.p_partkey).select(
         "l_partkey", "l_quantity", "l_extendedprice"
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     thresholds = brand_lines.groupBy("l_partkey").agg(
         round4(F.lit(0.2) * F.avg("l_quantity")).alias("qty_thresh")
     )
@@ -621,7 +622,7 @@ def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max(F.when(late, 1).otherwise(0)).alias("is_late"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     per_order = per_supp_order.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_supp"), F.sum("is_late").alias("n_late")

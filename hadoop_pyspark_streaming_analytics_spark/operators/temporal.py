@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources.readers import load_events
 
 
@@ -232,7 +233,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_view"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -240,7 +241,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("first_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_click"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round2
+from ..session import pin
 from ..sources.readers import load_events
 
 
@@ -226,7 +227,7 @@ def resample_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (
         ev.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("hour_ts"))
         .agg(F.expr("max_by(value, struct(ts, event_id))").alias("v"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     spine = (
         obs.groupBy("user_id")
@@ -575,14 +576,13 @@ def key_skew_report(
     projection), so it is checkpoint-pinned: unpinned, each consumer
     re-ran the full events scan + count — the round-17 census caught
     exactly that (2 events scans where this docstring claimed one).
-    The pinned frame is (user_id, n_events), ~16 B/key — a Tier-2
-    narrow proxy (SCALE.md "Checkpoint durability policy").
+    The pinned frame is (user_id, n_events), ~16 B/key.
     """
     ev = load_events(spark, sf_dir)
     counts = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     stats = counts.agg(
         F.expr("percentile(n_events, 0.5D)").alias("median_n"),

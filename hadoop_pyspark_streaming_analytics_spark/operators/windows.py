@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round2
+from ..session import pin
 from .relational import retail_base
 
 
@@ -125,9 +126,7 @@ def customer_spend_deciles_scalable(spark: SparkSession, sf_dir: str) -> DataFra
     # Two consumers (cutpoint agg + decile projection) and no Catalyst
     # subplan reuse: pin the |customers|-sized summary so the fact-table
     # join/agg underneath runs once.
-    summary = customer_summary(retail_base(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    summary = customer_summary(retail_base(spark, sf_dir)).transform(pin)
     cuts = summary.agg(
         F.expr(
             "transform(percentile(total_spent,"

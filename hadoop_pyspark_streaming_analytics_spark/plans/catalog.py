@@ -34,6 +34,7 @@ from ..operators import (
     windows,
 )
 from ..operators.relational import retail_base
+from ..session import pin
 from ..sources.readers import load_table
 from ..streaming import queries as stream_q
 
@@ -139,9 +140,7 @@ def _merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIVE times (round-15 census).  Materializing the batch before the
     # MERGE is exactly what table-format MERGE does with its source;
     # post-pin the plan scans customer twice (target + the batch build).
-    tenth = cust.filter(F.col("c_custkey") % 10 == 0).localCheckpoint(
-        eager=True
-    )
+    tenth = cust.filter(F.col("c_custkey") % 10 == 0).transform(pin)
     updates = tenth.withColumn("c_mktsegment", F.lit("UPDATED")).unionByName(
         tenth.withColumn(
             "c_custkey", F.col("c_custkey") + 10_000_000

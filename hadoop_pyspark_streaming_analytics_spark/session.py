@@ -22,26 +22,20 @@ catalog's generated-class working set so repeated plans reuse their
 classes; it applies only when ``get_spark`` builds the session, and a
 vanilla session keeps Spark's 100 entries.
 
-Checkpoint durability (SCALE.md "Checkpoint durability policy", round
-17): operators pin multiply-consumed frames with
-``localCheckpoint(eager=True)`` — executor-local, lineage-truncating,
-correct for local/bench runs where executor death is process death.  At
-cluster scale the CORPUS-GRAIN pins (the narrow per-doc/per-row proxy
-frames; per-entry byte budgets in SCALE.md) must become reliable
-``checkpoint()`` into a fault-tolerant directory: call
-``spark.sparkContext.setCheckpointDir(<HDFS/object-store path>)`` at
-session build and substitute ``.checkpoint(eager=True)`` at the same
-call sites — identical semantics and plans, durability instead of
-job-failure on executor loss.  Bounded (query/report-grain) and
-iterative-loop pins stay local at every scale; the three-tier decision
-rule is in SCALE.md.
+Pins: an operator materialises a frame that several consumers read, or
+an iterative loop's round, with :func:`pin`.  A pin truncates lineage, so
+a local pin lost with its executor fails the job.  The rule is one conf:
+when ``spark.checkpoint.dir`` (or ``SparkContext.setCheckpointDir``)
+names a fault-tolerant directory, every pin is a reliable checkpoint
+written there and survives executor loss; otherwise every pin is
+executor-local.  Local runs and a vanilla session set no directory.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -111,3 +105,12 @@ def get_spark(
         shuffle_partitions = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialise ``df`` now, truncating its lineage: a reliable
+    checkpoint when the context has a checkpoint directory, else a local
+    one (module docstring)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

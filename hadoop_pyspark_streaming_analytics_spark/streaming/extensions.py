@@ -13,6 +13,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def stream_dedup_exact(
     df: DataFrame,
@@ -201,7 +203,7 @@ def _lsh_batch_victims(
     duplicate_components → keep_canonical pipeline admits (the per-pair
     larger-side rule diverged on chains — ADVICE r3; a micro-batch's
     collision graph is tiny, so the iterative component propagation is
-    cheap).  The returned victim set is localCheckpoint'ed: it gates both
+    cheap).  The returned victim set is pinned: it gates both
     downstream writes, and without that each write re-reads the whole
     band store and re-runs both victim joins.
     """
@@ -218,7 +220,7 @@ def _lsh_batch_victims(
     # must finish that fold's GC-prune first or the new bands would be
     # reader-invisible and GC-destroyed.
     ensure_append_id_safe(spark, store_path, [store_path], batch_id)
-    buckets = lsh_band_buckets(docs, n, bands, rows).localCheckpoint(eager=True)
+    buckets = lsh_band_buckets(docs, n, bands, rows).transform(pin)
     try:
         # Manifest-aware authority: the live base (any negative id — all
         # < N, so always authority-visible) plus unfolded prior appends.
@@ -268,7 +270,7 @@ def _lsh_batch_victims(
     )
     victims = (
         intra if victims is None else victims.unionByName(intra).distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     return buckets, victims
 
 
@@ -387,7 +389,7 @@ def foreach_batch_curation(
     ``gate`` / ``lsh_dedup`` / ``tokenize_write`` / ``bands_write``, so a
     bench regression in the composed figure is attributable to a stage.
     The split points are the pipeline's natural materialization barriers
-    (two localCheckpoints and the two writes) — timing adds no extra
+    (two pins and the two writes) — timing adds no extra
     materialization and does not change the executed plan.
 
     ``compact_every`` (VERDICT r7 item 5): when set, the band store is
@@ -438,7 +440,7 @@ def foreach_batch_curation(
         )
         gated = docs.join(
             scored.select("doc_id", "model_score"), "doc_id"
-        ).localCheckpoint(eager=True)
+        ).transform(pin)
         t1 = time.perf_counter()
         buckets, victims = _lsh_batch_victims(
             gated.select("doc_id", "text"), batch_id, store_path, n, bands, rows
@@ -914,7 +916,7 @@ def foreach_batch_segment_scrub(
         # same guard as the LSH band store
         ensure_append_id_safe(spark, store_path, [store_path], batch_id)
         # reused by the count aggregate AND the scrub probe — one explode
-        segs = doc_segments(docs, seg_n).localCheckpoint(eager=True)
+        segs = doc_segments(docs, seg_n).transform(pin)
         batch_counts = segs.groupBy("segment").agg(
             F.countDistinct("doc_id").alias("n_docs")
         )

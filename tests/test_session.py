@@ -1,9 +1,25 @@
-"""The session factory's defaults: shuffle partitions and codegen cache."""
+"""The session factory's defaults (shuffle partitions, codegen cache) and
+its one pin rule."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import hadoop_pyspark_streaming_analytics_spark as pkg
 from hadoop_pyspark_streaming_analytics_spark.monitoring import codegen_compiles
-from hadoop_pyspark_streaming_analytics_spark.session import get_spark
+from hadoop_pyspark_streaming_analytics_spark.plans import CATALOG
+from hadoop_pyspark_streaming_analytics_spark.session import get_spark, pin
+
+from .oracle import compare
+
+#: Modules still calling ``localCheckpoint`` directly, until their sites
+#: move to ``pin``; the list only shrinks.
+RAW_PIN_MODULES = {
+    "operators/corpus.py",
+    "operators/profiling.py",
+    "operators/retrieval.py",
+}
 
 
 def test_default_shuffle_partitions_follow_parallelism(spark):
@@ -33,3 +49,56 @@ def test_repeated_queries_reuse_compiled_classes(spark):
     before = codegen_compiles(spark)
     run_all()
     assert codegen_compiles(spark) - before == 0
+
+
+
+def test_pin_is_durable_under_a_checkpoint_dir(spark, sf_dir, tmp_path):
+    """With a checkpoint dir every pin is a reliable checkpoint written
+    there, and a pinned catalog entry still matches its oracle; with the
+    dir unset, pins are executor-local again and write nothing."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+
+    def written() -> int:
+        return len(list(tmp_path.glob("*/rdd-*")))
+
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        assert pin(spark.range(10)).count() == 10
+        assert written() == 1
+        spec = next(s for s in CATALOG if s.name == "dedup_minhash_lsh")
+        compare(spec, spark, sf_dir)
+        assert written() > 1
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    before = written()
+    assert pin(spark.range(10)).count() == 10
+    assert written() == before
+
+
+def _local_checkpoint_calls(tree: ast.AST) -> list[ast.Call]:
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "localCheckpoint"
+    ]
+
+
+def test_raw_local_checkpoints_only_in_pin():
+    """``session.pin`` is the package's one ``localCheckpoint`` call, apart
+    from the modules in ``RAW_PIN_MODULES``."""
+    root = pathlib.Path(pkg.__file__).parent
+    trees = {
+        p.relative_to(root).as_posix(): ast.parse(p.read_text())
+        for p in root.rglob("*.py")
+    }
+    raw = {m for m, tree in trees.items() if _local_checkpoint_calls(tree)}
+    assert raw == RAW_PIN_MODULES | {"session.py"}
+    session = trees["session.py"]
+    pin_def = next(
+        n for n in session.body if isinstance(n, ast.FunctionDef) and n.name == "pin"
+    )
+    assert _local_checkpoint_calls(session) == _local_checkpoint_calls(pin_def)
