@@ -279,41 +279,18 @@ def append_text_index_batch(
     bit-identical to a from-scratch build over the union corpus
     (pytest-pinned) because tf/df/doc_len/stats are all additive across
     disjoint doc sets."""
-    from pyspark.errors import AnalysisException
+    from ..sources.genstore import read_prior_generations
 
-    from ..sources.genstore import (
-        ensure_append_id_safe,
-        generation_filter,
-        load_manifest,
-    )
-
-    # A reused batch id (fresh checkpoint after a crash-interrupted fold)
-    # must finish that fold's GC-prune before any new data lands under it.
-    ensure_append_id_safe(
+    existing = read_prior_generations(
         spark,
         path,
-        [f"{path}/{part}" for part in ("postings", "doc_len", "stats")],
         batch_id,
+        gen_dirs=[f"{path}/{part}" for part in ("postings", "doc_len", "stats")],
+        artifact=f"{path}/doc_len",
     )
     docs = new_docs.select("doc_id", "text")
-    try:
-        existing = (
-            spark.read.option("basePath", f"{path}/doc_len")
-            .parquet(f"{path}/doc_len")
-            .filter(
-                generation_filter(load_manifest(spark, path))
-                & (F.col("batch_id") != int(batch_id))
-            )
-            .select("doc_id")
-        )
-        docs = docs.join(existing, "doc_id", "left_anti")
-    except AnalysisException as e:
-        # Only the genuinely-missing first-generation case may degrade to
-        # no-prior-ids (the _lsh_batch_victims authority rule) — an
-        # existing-but-unreadable doc_len tree must propagate, not
-        # silently double-index.
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    if existing is not None:
+        docs = docs.join(existing.select("doc_id"), "doc_id", "left_anti")
     _write_text_index_generation(_term_freqs(docs), path, batch_id)
 
 
@@ -321,7 +298,6 @@ def compact_text_index(
     spark: SparkSession,
     path: str,
     gc_immediately: bool = True,
-    unique_base_id: bool = False,
 ) -> int:
     """Fold every appended ``batch_id=N`` generation back into a single
     base generation (token-clustered like a fresh build), returning the
@@ -357,7 +333,6 @@ def compact_text_index(
         [f"{path}/{part}" for part in ("postings", "doc_len", "stats")],
         write_new_base,
         gc_immediately=gc_immediately,
-        unique_base_id=unique_base_id,
     )
 
 

@@ -836,24 +836,12 @@ def append_pq_index_batch(
     # everything-is-a-dup self-erase).  A vec_id-only scan of the compact
     # codes; at 100 TB, front it with a vec_id Bloom of the index (the
     # scrubbing-tier pattern) and pay the exact anti-join on bloom hits.
-    from ..sources.genstore import (
-        ensure_append_id_safe,
-        generation_filter,
-        load_manifest,
-    )
+    from ..sources.genstore import read_prior_generations
 
-    # A reused batch id (fresh checkpoint after a crash-interrupted fold)
-    # must finish that fold's GC-prune before any new data lands under it.
-    ensure_append_id_safe(spark, f"{path}/codes", [f"{path}/codes"], batch_id)
-    existing = (
-        spark.read.parquet(f"{path}/codes")
-        .filter(
-            generation_filter(load_manifest(spark, f"{path}/codes"))
-            & (F.col("batch_id") != int(batch_id))
-        )
-        .select("vec_id")
-    )
-    fresh = emb.join(existing, "vec_id", "left_anti")
+    existing = read_prior_generations(spark, f"{path}/codes", batch_id)
+    fresh = emb
+    if existing is not None:
+        fresh = emb.join(existing.select("vec_id"), "vec_id", "left_anti")
     assign = _assign_to_centroids(fresh, cents).select("vec_id", "centroid_id")
     codes = build_pq_codes_compact(fresh, cb).join(assign, "vec_id")
     write_parquet(
@@ -1713,7 +1701,6 @@ def compact_pq_index(
     spark: SparkSession,
     path: str,
     gc_immediately: bool = True,
-    unique_base_id: bool = False,
 ) -> int:
     """Index-lifecycle step 3: fold every ``codes/batch_id=N`` append
     prefix back into a single base generation, returning the number of
@@ -1758,7 +1745,6 @@ def compact_pq_index(
     return fold_generations(
         spark, codes_dir, [codes_dir], write_new_base,
         gc_immediately=gc_immediately,
-        unique_base_id=unique_base_id,
     )
 
 

@@ -29,6 +29,8 @@ when ``spark.checkpoint.dir`` (or ``SparkContext.setCheckpointDir``)
 names a fault-tolerant directory, every pin is a reliable checkpoint
 written there and survives executor loss; otherwise every pin is
 executor-local.  Local runs and a vanilla session set no directory.
+Under ``get_spark`` a reliable pin's files are deleted once its frame is
+garbage-collected.
 """
 
 from __future__ import annotations
@@ -76,6 +78,10 @@ DEFAULT_CONF: dict[str, str] = {
     # factory builds the JVM's first session; a vanilla session (the
     # driver's __spark_entry__ path) keeps 100.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # A reliable pin's rdd-* directory is deleted once its frame is
+    # garbage-collected; without this a long-lived session's checkpoint
+    # directory keeps every pin it ever wrote.  Static, like the above.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 

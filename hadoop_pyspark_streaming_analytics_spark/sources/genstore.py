@@ -1,17 +1,17 @@
 """Object-store-safe generational-store layer (manifest-pointer commit).
 
-The three incremental index stores (PQ codes — operators/similarity.py,
-BM25 text index — operators/retrieval.py, LSH band store —
-streaming/extensions.py) share one physical idiom: a base generation plus
-replay-idempotent ``batch_id=N`` append generations, periodically FOLDED
-back into a fresh base by a compactor.  Through round 7 the fold was
-published by renaming directories (``os.replace``) — atomic on a local
-POSIX disk, but **wrong on the filesystems a 100 TB deployment actually
-uses**: HDFS directory rename is not atomic with respect to concurrent
-listing, and object stores (S3/GCS) have no rename at all, so every
-carefully argued interruption window silently dissolved off local disk
-(VERDICT r7 "what's wrong" #2; ADVICE r7 further showed the retry paths
-could *destroy* data after a crash mid-swap).
+The four incremental stores (PQ codes — operators/similarity.py, BM25
+text index — operators/retrieval.py, LSH band store and segment-frequency
+store — streaming/extensions.py) share one physical idiom: a base
+generation plus replay-idempotent ``batch_id=N`` append generations,
+periodically FOLDED back into a fresh base by a compactor.  Through
+round 7 the fold was published by renaming directories (``os.replace``)
+— atomic on a local POSIX disk, but **wrong on the filesystems a 100 TB
+deployment actually uses**: HDFS directory rename is not atomic with
+respect to concurrent listing, and object stores (S3/GCS) have no rename
+at all, so every carefully argued interruption window silently dissolved
+off local disk (VERDICT r7 "what's wrong" #2; ADVICE r7 further showed
+the retry paths could *destroy* data after a crash mid-swap).
 
 This module replaces directory renames with the commit protocol object
 stores are designed for — the same shape Delta Lake's ``_delta_log`` and
@@ -47,8 +47,8 @@ Iceberg's metadata pointer use (public designs):
   forever, and a fresh checkpoint's REUSED batch ids (the keep_latest=0
   contract in compact_band_store) land as ordinary, fully visible
   generations instead of being silently pruned and then destroyed by
-  the next GC.  Writers about to (re)create ``batch_id=N`` call
-  :func:`ensure_append_id_safe`, which closes the one crash window a
+  the next GC.  The append guard :func:`ensure_append_id_safe` (run by
+  :func:`read_prior_generations`) closes the one crash window a
   reused id could still hit (fold committed, GC never ran): it GCs the
   lingering debris and prunes the blacklist BEFORE the new data exists,
   so GC can never confuse the new generation with the old one.
@@ -63,6 +63,18 @@ Iceberg's metadata pointer use (public designs):
   (``Path.getFileSystem`` via the JVM gateway), so the same code drives
   ``file://``, ``hdfs://`` and ``s3a://`` stores; nothing in this module
   touches ``os``/``shutil``.
+
+The four stores share ONE append rule, spelled once in
+:func:`read_prior_generations`: an append of batch N runs the append-id
+guard (:func:`ensure_append_id_safe`), reads its authority from the live
+generations OTHER than N (the manifest's base plus unfolded appends),
+reads nothing at all when there are none, and then overwrites its own
+``batch_id=N`` directory.  Excluding N is what makes replay exact: a
+batch re-run after a crash never meets its own half-written rows, and a
+``batch_id=N/`` holding only a crashed writer's ``_temporary/`` is no
+generation to read.  Under the fresh-checkpoint contract
+(compact_band_store) no generation above N exists while batch N runs,
+so "other than N" is the prior-batches authority ``< N``.
 
 Crash matrix for :func:`fold_generations` (the shared compactor driver):
 before the base write → old manifest governs, retry overwrites the same
@@ -101,11 +113,7 @@ Post-commit GC always re-loads the manifest and sweeps against the
 FRESHEST version, so a committer that lost a race it never noticed
 cannot delete directories a newer manifest still references — the
 stale-snapshot clobber that silently destroyed data under last-wins.
-Two concurrent FOLDS additionally contend on the staging directory
-itself (both target ``batch_id=live-1``); pass ``unique_base_id=True``
-to draw the new base id from a uuid instead, which removes the shared
-directory entirely (the loser's abort then deletes only its own
-debris).  Honest residual, same as Delta's published S3 story: the
+Honest residual, same as Delta's published S3 story: the
 exclusive-create primitive is check-then-act on S3A (no O_EXCL), so on
 raw S3 the CAS narrows the race to milliseconds but only HDFS/local
 make it atomic — multi-writer S3 deployments need an external
@@ -382,9 +390,8 @@ def generation_filter(manifest: dict) -> Column:
 
 def read_live(spark: SparkSession, store: str) -> DataFrame:
     """``spark.read.parquet(store)`` restricted to the manifest's live
-    generations — the one-call reader for root-layout stores (band
-    store).  Multi-artifact stores (text index, PQ codes) apply
-    :func:`generation_filter` per artifact with one shared manifest."""
+    generations — the whole-store reader for root-layout stores.
+    Appends read through :func:`read_prior_generations` instead."""
     return (
         spark.read.option("basePath", store)
         .parquet(store)
@@ -411,20 +418,23 @@ def append_ids(spark: SparkSession, gen_dir: str, manifest: dict) -> list[int]:
     return sorted(ids)
 
 
-def gc_superseded(spark: SparkSession, gen_dirs: list[str], manifest: dict) -> None:
+def gc_superseded(spark: SparkSession, gen_dirs: list[str], manifest: dict) -> int:
     """Delete every generation directory the manifest no longer
     references: stale bases (negative id != live) and folded appends.
     Pure cleanup — readers already can't see these — so it is safe to
-    crash anywhere inside and safe to re-run."""
+    crash anywhere inside and safe to re-run.  Returns the number of
+    directories deleted."""
     live = int(manifest["live_base"])
-    folded = set(manifest.get("folded", []))
+    folded = {int(x) for x in manifest.get("folded", [])}
+    removed = 0
     for gen_dir in gen_dirs:
         for name in list_names(spark, gen_dir):
             if not name.startswith("batch_id="):
                 continue
             n = int(name.split("=", 1)[1])
             if (n < 0 and n != live) or n in folded:
-                delete_path(spark, f"{gen_dir}/batch_id={n}")
+                removed += delete_path(spark, f"{gen_dir}/batch_id={n}")
+    return removed
 
 
 def _prune_folded(
@@ -508,26 +518,17 @@ def vacuum_store(
     if gen_dirs is None:
         gen_dirs = [store]
     manifest = load_manifest(spark, store)
-    live = int(manifest["live_base"])
-    folded = {int(x) for x in manifest.get("folded", [])}
-    removed = 0
-    for gen_dir in gen_dirs:
-        for name in list_names(spark, gen_dir):
-            if not name.startswith("batch_id="):
-                continue
-            n = int(name.split("=", 1)[1])
-            if (n < 0 and n != live) or n in folded:
-                if delete_path(spark, f"{gen_dir}/batch_id={n}"):
-                    removed += 1
+    removed = gc_superseded(spark, gen_dirs, manifest)
     _prune_folded(spark, store, gen_dirs, manifest)
     return removed
 
 
 def ensure_append_id_safe(
     spark: SparkSession, store: str, gen_dirs: list[str], batch_id: int
-) -> None:
-    """Writer-side guard before (re)creating ``batch_id=N``: a no-op
-    unless N sits in the manifest's folded blacklist — reachable only
+) -> dict:
+    """Writer-side guard before (re)creating ``batch_id=N``, returning
+    the governing manifest: a no-op unless N sits in the manifest's
+    folded blacklist — reachable only
     when a fresh checkpoint reuses ids after a fold crashed between its
     commit and the GC-prune (the normal fold path leaves ``folded``
     empty).  Writing into a blacklisted id would be catastrophic twice
@@ -538,7 +539,7 @@ def ensure_append_id_safe(
     data lands under it."""
     manifest = load_manifest(spark, store)
     if int(batch_id) not in {int(x) for x in manifest.get("folded", [])}:
-        return
+        return manifest
     warnings.warn(
         f"genstore: batch_id={batch_id} is folded in {store}'s manifest "
         "(a fold committed but its GC never completed); finishing GC and "
@@ -554,29 +555,42 @@ def ensure_append_id_safe(
             "after GC — a superseded directory could not be deleted; "
             "appending would write data readers prune and GC destroys."
         )
+    return manifest
 
 
-def _allocate_base_id(
-    spark: SparkSession, gen_dirs: list[str], live: int, unique: bool
-) -> int:
-    """The id of the base generation a fold is about to stage.  Default:
-    ``live - 1`` — deterministic and auditable under the supported
-    single-compactor-per-store rule.  ``unique=True`` draws a uuid-
-    derived negative id instead (collision-checked against every
-    artifact), so two compactors racing on one store can never write
-    into the SAME staging directory — the loser's abort then deletes
-    only its own debris (see the module concurrency note)."""
-    if not unique:
-        return live - 1
-    while True:
-        candidate = -(2 + uuid.uuid4().int % (1 << 40))
-        if candidate == live:
-            continue
-        if any(
-            path_exists(spark, f"{d}/batch_id={candidate}") for d in gen_dirs
-        ):
-            continue
-        return candidate
+def read_prior_generations(
+    spark: SparkSession,
+    store: str,
+    batch_id: int,
+    gen_dirs: list[str] | None = None,
+    artifact: str | None = None,
+) -> DataFrame | None:
+    """The one append path's authority read (module docstring): the live
+    rows of ``artifact`` in every generation other than ``batch_id``, or
+    None when no such generation exists — without calling
+    ``spark.read``, so a fresh store, or one whose only generation is a
+    crashed ``batch_id=N/_temporary/``, reads as empty instead of
+    failing path resolution or schema inference.  A store that has other
+    generations but cannot be read still raises.
+
+    Runs :func:`ensure_append_id_safe` first, because the caller is about
+    to (re)create ``batch_id=N``.  ``gen_dirs`` (every directory under
+    the store's manifest) and ``artifact`` (the one read) default to
+    ``store`` itself, the root layout."""
+    gen_dirs = gen_dirs or [store]
+    artifact = artifact or store
+    manifest = ensure_append_id_safe(spark, store, gen_dirs, batch_id)
+    others = [n for n in append_ids(spark, artifact, manifest) if n != batch_id]
+    base = f"{artifact}/batch_id={int(manifest['live_base'])}"
+    if not others and not path_exists(spark, base):
+        return None
+    return (
+        spark.read.option("basePath", artifact)
+        .parquet(artifact)
+        .filter(
+            generation_filter(manifest) & (F.col("batch_id") != int(batch_id))
+        )
+    )
 
 
 def fold_generations(
@@ -586,7 +600,6 @@ def fold_generations(
     write_new_base: Callable[[Column, int], None],
     keep_latest: int = 0,
     gc_immediately: bool = True,
-    unique_base_id: bool = False,
 ) -> int:
     """The shared compaction driver behind compact_pq_index /
     compact_text_index / compact_band_store.
@@ -616,11 +629,9 @@ def fold_generations(
     appends are immutable once written.  A lost race against another
     FOLD (``live_base`` moved) aborts with
     :class:`ManifestConflictError` — the winner's commit governs, and
-    under ``unique_base_id=True`` the loser first deletes its own
-    staging directory (under deterministic ids the directory is SHARED
-    with the winner and is left alone; its contents are suspect, which
-    is exactly why concurrent compactors should pass
-    ``unique_base_id=True`` or, better, not exist).
+    the staging directory ``live-1`` is SHARED with the winner, so it is
+    left alone (its contents are suspect, which is exactly why
+    concurrent compactors should not exist).
 
     Returns the number of append generations folded (0 = nothing to do;
     GC of previously superseded debris still runs)."""
@@ -637,7 +648,7 @@ def fold_generations(
     if not fold:
         return 0
     live = int(manifest["live_base"])
-    new_base = _allocate_base_id(spark, gen_dirs, live, unique_base_id)
+    new_base = live - 1
     live_filter = (F.col("batch_id") == F.lit(live)) | F.col("batch_id").isin(
         [int(x) for x in fold]
     )
@@ -658,20 +669,15 @@ def fold_generations(
         except ManifestConflictError:
             fresh = load_manifest(spark, store)
             if int(fresh["live_base"]) != live:
-                # Another fold won the store.  Its commit governs; this
-                # attempt's staged base is stale debris — removable only
-                # when provably ours alone (unique ids), left in place
-                # when the id is shared (the winner references it).
-                if unique_base_id and int(fresh["live_base"]) != new_base:
-                    for gen_dir in gen_dirs:
-                        delete_path(spark, f"{gen_dir}/batch_id={new_base}")
+                # Another fold won the store and its commit governs.
+                # The staged base stays: a fold from the same snapshot
+                # staged the same id, and any other id is superseded
+                # debris the next GC removes.
                 raise ManifestConflictError(
                     f"genstore: concurrent fold committed {store} to "
                     f"live_base={fresh['live_base']} while this fold "
                     f"staged batch_id={new_base}; the supported mode is "
-                    "one compactor per store — if concurrent compaction "
-                    "is intended, pass unique_base_id=True so racers "
-                    "never share a staging directory."
+                    "one compactor per store."
                 ) from None
             manifest = fresh  # compatible: recompute blacklist, retry
     if not committed:

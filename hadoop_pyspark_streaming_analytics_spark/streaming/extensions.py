@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -153,9 +152,9 @@ def foreach_batch_lsh_dedup(
 
     Exactly-once under replay: both writes go to a batch_id=N
     subdirectory with overwrite (re-running batch N rewrites the same
-    files), and the dedup authority is ONLY prior batches
-    (batch_id < N read back from the store's partition column), so a
-    replayed batch never collides with its own half-written bands.
+    files), and the dedup authority is ONLY the other generations
+    (genstore.read_prior_generations), so a replayed batch never
+    collides with its own half-written bands.
 
     Per batch:
     1. bucket the batch (shingle → minhash → band digests);
@@ -195,8 +194,9 @@ def _lsh_batch_victims(
     returns (band buckets for this batch, victim doc_ids).
 
     Victims = docs bucket-colliding with PRIOR batches' store
-    (batch_id < N — the dedup authority is only prior batches, so a
-    replayed batch never collides with its own half-written bands) ∪
+    (genstore.read_prior_generations — the dedup authority is only the
+    other generations, so a replayed batch never collides with its own
+    half-written bands) ∪
     intra-batch collisions resolved with BATCH-PARITY semantics:
     connected components over the batch's collision pairs, keeping each
     component's smallest doc_id — exactly what the batch-mode
@@ -208,47 +208,18 @@ def _lsh_batch_victims(
     band store and re-runs both victim joins.
     """
     from ..operators.dedup import connected_components, lsh_band_buckets
-    from ..sources.genstore import (
-        ensure_append_id_safe,
-        generation_filter,
-        load_manifest,
-    )
+    from ..sources.genstore import read_prior_generations
 
-    spark = docs.sparkSession
-    # The handler writes batch_id=N after this returns: a reused id
-    # (fresh checkpoint after a crash-interrupted keep_latest=0 fold)
-    # must finish that fold's GC-prune first or the new bands would be
-    # reader-invisible and GC-destroyed.
-    ensure_append_id_safe(spark, store_path, [store_path], batch_id)
+    prior = read_prior_generations(docs.sparkSession, store_path, batch_id)
     buckets = lsh_band_buckets(docs, n, bands, rows).transform(pin)
-    try:
-        # Manifest-aware authority: the live base (any negative id — all
-        # < N, so always authority-visible) plus unfolded prior appends.
-        # Folded generations may physically linger until GC; the filter
-        # prunes them so their rows aren't scanned twice.
-        prior = (
-            spark.read.option("basePath", store_path)
-            .parquet(store_path)
-            .filter(
-                generation_filter(load_manifest(spark, store_path))
-                & (F.col("batch_id") < batch_id)
-            )
-            .select("band_id", "band_hash")
-        )
-    except AnalysisException as e:
-        # ONLY the genuinely-missing-store first-batch case may degrade
-        # to no-prior-state.  Any other AnalysisException — an empty but
-        # existing directory ([UNABLE_TO_INFER_SCHEMA]), a schema-broken
-        # store, etc. — means the store exists but is unreadable, and
-        # MUST propagate rather than silently admit near-dups against
-        # an effectively-unreadable authority.
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        prior = None
     victims = None
     if prior is not None:
         victims = (
-            buckets.join(prior, ["band_id", "band_hash"], "left_semi")
+            buckets.join(
+                prior.select("band_id", "band_hash"),
+                ["band_id", "band_hash"],
+                "left_semi",
+            )
             .select("doc_id")
             .distinct()
         )
@@ -279,7 +250,6 @@ def compact_band_store(
     store_path: str,
     keep_latest: int = 1,
     gc_immediately: bool = True,
-    unique_base_id: bool = False,
 ) -> int:
     """Fold the LSH band store's per-micro-batch ``batch_id=N``
     generations into a fresh base generation — the band store's
@@ -291,10 +261,11 @@ def compact_band_store(
     The ``keep_latest`` highest batch ids are NOT folded: Spark replays
     the last un-committed batch after a restart, and a replayed batch
     must not find its own bands in the "prior batches" authority (the
-    base's negative id always passes the ``batch_id < N`` filter) — that
-    would flag the whole batch as self-duplicates and overwrite its
-    output empty.  Folding only committed history keeps replay exact;
-    with the stream fully stopped, ``keep_latest=0`` folds everything.
+    base's negative id is always one of the generations other than N)
+    — that would flag the whole batch as self-duplicates and overwrite
+    its output empty.  Folding only committed history keeps replay
+    exact; with the stream fully stopped, ``keep_latest=0`` folds
+    everything.
 
     Publication is the genstore manifest-pointer commit
     (sources/genstore.py — VERDICT r7 item 2): the folded rows land in a
@@ -307,15 +278,13 @@ def compact_band_store(
     store alike.
 
     OPERATIONAL CONTRACT (applies to every generational store here —
-    band store, PQ codes, text index): restarting a stream with a FRESH
-    checkpoint restarts batch ids at 0, which (a) would overwrite the
-    previous incarnation's ``batch_id=0`` generation and (b) drops every
-    old generation out of the ``batch_id < N`` dedup authority (0..k are
-    not < 0; only the negative-id base is).  Run the matching compact
-    with ``keep_latest=0`` while the stream is stopped BEFORE pointing a
-    new checkpoint at an existing store — folding history into the base
-    makes it authority-visible to every future id sequence and leaves no
-    generation for batch 0 to collide with."""
+    band store, segment store, PQ codes, text index): restarting a
+    stream with a FRESH checkpoint restarts batch ids at 0, which would
+    overwrite the previous incarnation's ``batch_id=0`` generation.  Run
+    the matching compact with ``keep_latest=0`` while the stream is
+    stopped BEFORE pointing a new checkpoint at an existing store —
+    folding history into the base leaves no generation for batch 0 to
+    collide with, and no generation above any new batch id."""
     from ..sources.genstore import content_bytes, fold_generations
 
     def write_new_base(live_filter, new_base: int) -> None:
@@ -345,7 +314,6 @@ def compact_band_store(
         write_new_base,
         keep_latest=keep_latest,
         gc_immediately=gc_immediately,
-        unique_base_id=unique_base_id,
     )
 
 
@@ -872,12 +840,11 @@ def foreach_batch_segment_scrub(
 
     Exactly-once under replay: both writes go to a ``batch_id=N``
     subdirectory with overwrite, and the count authority is ONLY prior
-    batches (``batch_id < N``) plus this batch's own recomputed counts —
-    a replayed batch never double-counts its own half-written store rows.
-    The authority read is manifest-aware (sources/genstore.py), so
+    batches (genstore.read_prior_generations) plus this batch's own
+    recomputed counts — a replayed batch never double-counts its own
+    half-written store rows.  The authority read is manifest-aware, so
     :func:`compact_segment_store` can fold old generations into a
-    negative-id base (always ``< N``, so always authority-visible)
-    without the handler noticing.
+    negative-id base without the handler noticing.
 
     Streaming-vs-batch contract (pinned in tests/test_segment_dedup.py):
     a segment's offender status uses all data seen SO FAR, so the handler
@@ -897,11 +864,7 @@ def foreach_batch_segment_scrub(
             scrub_against_offenders,
         )
 
-        from ..sources.genstore import (
-            ensure_append_id_safe,
-            generation_filter,
-            load_manifest,
-        )
+        from ..sources.genstore import read_prior_generations
 
         # `is None`, not `or`: max_doc_freq=0 (scrub anything repeated
         # at all) is a legal knob value, not "unset"
@@ -911,28 +874,15 @@ def foreach_batch_segment_scrub(
         docs = batch_df.select(
             "doc_id", "text", F.lit("stream").alias("source")
         )
-        # a reused id (fresh checkpoint after a crash-interrupted
-        # keep_latest=0 fold) must finish that fold's GC-prune first —
-        # same guard as the LSH band store
-        ensure_append_id_safe(spark, store_path, [store_path], batch_id)
+        prior = read_prior_generations(spark, store_path, batch_id)
+        if prior is None:
+            prior = spark.createDataFrame([], "segment string, n_docs long")
         # reused by the count aggregate AND the scrub probe — one explode
         segs = doc_segments(docs, seg_n).transform(pin)
         batch_counts = segs.groupBy("segment").agg(
             F.countDistinct("doc_id").alias("n_docs")
         )
-        try:
-            prior = (
-                spark.read.option("basePath", store_path)
-                .parquet(store_path)
-                .filter(generation_filter(load_manifest(spark, store_path)))
-                .filter(F.col("batch_id") < batch_id)
-                .groupBy("segment")
-                .agg(F.sum("n_docs").alias("prior_docs"))
-            )
-        except AnalysisException:  # first batch: no store yet
-            prior = spark.createDataFrame(
-                [], "segment string, prior_docs long"
-            )
+        prior = prior.groupBy("segment").agg(F.sum("n_docs").alias("prior_docs"))
         offenders = (
             batch_counts.join(prior, "segment", "full_outer")
             .where(
@@ -957,7 +907,6 @@ def compact_segment_store(
     store_path: str,
     keep_latest: int = 1,
     gc_immediately: bool = True,
-    unique_base_id: bool = False,
 ) -> int:
     """Fold the segment-frequency store's per-micro-batch ``batch_id=N``
     generations into a fresh base — the scrub store's compaction story,
@@ -997,7 +946,6 @@ def compact_segment_store(
         write_new_base,
         keep_latest=keep_latest,
         gc_immediately=gc_immediately,
-        unique_base_id=unique_base_id,
     )
 
 

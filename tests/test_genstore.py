@@ -465,51 +465,43 @@ def test_fold_aborts_when_concurrent_fold_wins(spark, tmp_path):
     assert _live_vals(spark, store) == [1, 2]
 
 
-def test_unique_base_id_fold_and_loser_cleanup(spark, tmp_path):
-    """unique_base_id=True removes the one resource two racing folds
-    still share under deterministic ids — the staging directory: the
-    winner's base is untouchable by the loser, and the loser's abort
-    deletes its own debris (provably private, so safe)."""
+def test_read_prior_generations_skips_the_read_without_other_generations(
+    spark, tmp_path
+):
+    """The append path's authority read returns None, without a
+    ``spark.read`` that would fail, for a missing store and for a store
+    whose only generation is the replayed batch's crashed
+    ``_temporary/``; otherwise it reads every live generation but N."""
     store = str(tmp_path / "s")
-    _write_gen(spark, store, -1, [1])
-    _write_gen(spark, store, 0, [2])
-    assert _fold(spark, store, unique_base_id=True) == 1
-    m = genstore.load_manifest(spark, store)
-    assert m["live_base"] < -1 and m["live_base"] != -2  # uuid-derived
-    assert _live_vals(spark, store) == [1, 2]
-    assert sorted(
-        d for d in os.listdir(store) if d.startswith("batch_id=")
-    ) == [f"batch_id={m['live_base']}"]
+    assert genstore.read_prior_generations(spark, store, 0) is None
+    os.makedirs(f"{store}/batch_id=0/_temporary/0")
+    assert genstore.read_prior_generations(spark, store, 0) is None
 
-    # loser cleanup on abort: its private staging dir is removed
-    _write_gen(spark, store, 0, [3])
-    staged = []
+    _write_gen(spark, store, 0, [1])
+    _write_gen(spark, store, 1, [2])
+    prior = genstore.read_prior_generations(spark, store, 1)
+    assert sorted(r["v"] for r in prior.collect()) == [1]
+    # after a full fold the base alone is the authority for a reused id
+    assert _fold(spark, store) == 2
+    prior = genstore.read_prior_generations(spark, store, 0)
+    assert sorted(r["v"] for r in prior.collect()) == [1, 2]
 
-    def write_and_lose(live_filter, new_base: int) -> None:
-        staged.append(new_base)
-        (
-            spark.read.option("basePath", store)
-            .parquet(store)
-            .filter(live_filter)
-            .select("v")
-            .write.mode("overwrite")
-            .parquet(f"{store}/batch_id={new_base}")
-        )
-        (
-            spark.read.option("basePath", store)
-            .parquet(store)
-            .filter(live_filter)
-            .select("v")
-            .write.mode("overwrite")
-            .parquet(f"{store}/batch_id=-7")
-        )
-        snap = genstore.load_manifest(spark, store)
-        genstore.commit_next(spark, store, snap, live_base=-7, folded=[0])
 
-    with pytest.raises(genstore.ManifestConflictError, match="concurrent fold"):
-        genstore.fold_generations(
-            spark, store, [store], write_and_lose, unique_base_id=True
-        )
-    assert not genstore.path_exists(spark, f"{store}/batch_id={staged[0]}")
-    assert genstore.load_manifest(spark, store)["live_base"] == -7
-    assert _live_vals(spark, store) == [1, 2, 3]
+def test_append_guard_runs_only_inside_genstore():
+    """Every append goes through ``read_prior_generations``: the package
+    calls ``ensure_append_id_safe`` nowhere outside genstore.py."""
+    import ast
+    import pathlib
+
+    import hadoop_pyspark_streaming_analytics_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    callers = {
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.Call)
+        and "ensure_append_id_safe"
+        in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+    }
+    assert callers == {"sources/genstore.py"}

@@ -4,7 +4,9 @@ its one pin rule."""
 from __future__ import annotations
 
 import ast
+import gc
 import pathlib
+import time
 
 import hadoop_pyspark_streaming_analytics_spark as pkg
 from hadoop_pyspark_streaming_analytics_spark.monitoring import codegen_compiles
@@ -64,7 +66,9 @@ def test_pin_is_durable_under_a_checkpoint_dir(spark, sf_dir, tmp_path):
 
     sc.setCheckpointDir(str(tmp_path))
     try:
-        assert pin(spark.range(10)).count() == 10
+        # held: an unreferenced pin's dir goes at the next JVM GC
+        first = pin(spark.range(10))
+        assert first.count() == 10
         assert written() == 1
         spec = next(s for s in CATALOG if s.name == "dedup_minhash_lsh")
         compare(spec, spark, sf_dir)
@@ -75,6 +79,30 @@ def test_pin_is_durable_under_a_checkpoint_dir(spark, sf_dir, tmp_path):
     before = written()
     assert pin(spark.range(10)).count() == 10
     assert written() == before
+
+
+def test_unreferenced_pins_leave_the_checkpoint_dir(spark, tmp_path):
+    """A reliable pin's ``rdd-*`` dir is deleted once its frame is
+    garbage-collected, so a long-lived session's checkpoint dir does not
+    keep every pin it ever wrote."""
+    sc = spark.sparkContext
+
+    def written() -> int:
+        return len(list(tmp_path.glob("*/rdd-*")))
+
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        df = pin(spark.range(10))
+        assert df.count() == 10 and written() == 1
+        del df
+        deadline = time.monotonic() + 60
+        while written() and time.monotonic() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(0.5)
+        assert written() == 0
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
 
 
 def _local_checkpoint_calls(tree: ast.AST) -> list[ast.Call]:

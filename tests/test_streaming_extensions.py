@@ -1630,3 +1630,70 @@ def test_hybrid_for_queries_nprobe_full_probe_equivalence(spark, tmp_path):
     }
     for key, rank in lex_pruned.items():
         assert lex_base.get(key, rank) == rank
+
+
+# ---------------------------------------------------------------------------
+# Replay after a crash in the middle of a batch's store write
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def crash_batch(spark):
+    """One small micro-batch shared by the crash-replay cases: 30 corpus
+    documents plus near-duplicate twins of ten of them, so every dedup
+    stage has rows to drop."""
+    from pyspark.sql import functions as F
+
+    from hadoop_pyspark_streaming_analytics_spark.sources.readers import load_table
+
+    docs = (
+        load_table(spark, "/root/testdata/sf0.001", "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 30)
+    )
+    twins = docs.filter(F.col("doc_id") < 10).select(
+        (F.col("doc_id") + 100_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" extra")).alias("text"),
+    )
+    rows = docs.unionByName(twins).collect()
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _crash_handler(name: str, store: str, out: str):
+    from hadoop_pyspark_streaming_analytics_spark.streaming.extensions import (
+        foreach_batch_curation,
+        foreach_batch_lsh_dedup,
+        foreach_batch_segment_scrub,
+    )
+
+    if name == "lsh_dedup":
+        return foreach_batch_lsh_dedup(store, out)
+    if name == "curation":
+        return foreach_batch_curation(store, out, [("t", "h"), ("th", "e")])
+    return foreach_batch_segment_scrub(store, out, max_doc_freq=1)
+
+
+@pytest.mark.parametrize("handler", ["lsh_dedup", "curation", "segment_scrub"])
+def test_replay_after_crash_mid_store_write_equals_clean_run(
+    spark, tmp_path, crash_batch, handler
+):
+    """A process that died while batch 0 was writing its store leaves
+    ``store/batch_id=0/`` holding only the writer's ``_temporary/``.
+    Replaying batch 0 must produce exactly the clean run's output and
+    store: the crashed directory is no generation to dedup against."""
+
+    def rows(path: str) -> list[tuple]:
+        df = spark.read.option("basePath", path).parquet(path)
+        return sorted(map(tuple, df.select(sorted(df.columns)).collect()), key=repr)
+
+    clean = tmp_path / "clean"
+    _crash_handler(handler, str(clean / "store"), str(clean / "out"))(
+        crash_batch, 0
+    )
+    crashed = tmp_path / "crashed"
+    (crashed / "store" / "batch_id=0" / "_temporary" / "0").mkdir(parents=True)
+    _crash_handler(handler, str(crashed / "store"), str(crashed / "out"))(
+        crash_batch, 0
+    )
+    assert rows(str(crashed / "out")) == rows(str(clean / "out"))
+    assert rows(str(crashed / "store")) == rows(str(clean / "store"))
